@@ -3,14 +3,16 @@
 
 Lifecycle parity:
   glob *.sdf[.gz]              → path glob            (utils.py:307-308)
-  manifest anti-join           → broadcast left_anti   (utils.py:272-282)
+  manifest anti-join           → driver set difference (utils.py:272-282)
   per-record extract/cast/
   transform/NOT-NULL skip      → one declarative select + na.drop
                                                        (utils.py:59-155)
   INSERT INTO compounds        → parquet append        (utils.py:136-159)
   manifest row per file        → manifest append       (utils.py:327-332)
   deferred CREATE INDEX        → sorted covering
-                                 projections           (utils.py:334-341)
+                                 projections, rebuilt
+                                 only when compounds
+                                 changed               (utils.py:334-341)
   error taxonomy → exit code   → build_db return code  (utils.py:343-365)
 
 Scale design notes:
@@ -27,6 +29,16 @@ Scale design notes:
   sorted covering projection ``idx_<col>`` (col + pk) — the columnar
   analog of CREATE INDEX (utils.py:334-341), enabling stats-pruned
   lookups on that column at a small storage cost.
+- Deferred CREATE INDEX is incremental: the projections are rebuilt only
+  when the compounds table's data files changed. ``build_indexes`` keeps
+  a stamp (``db/_idx_stamp.json``: indexed columns, primary key and a
+  digest of the sorted compounds file names) next to the projections.
+  Every write creates new part-file names, so an append, a crash-retry
+  overwrite and a reset all change it. A call whose stamp matches, with
+  every ``idx_<col>/_SUCCESS`` present, launches no Spark job. A rebuild
+  deletes the stamp first and writes it last, so a crash anywhere in
+  between forces a rebuild on the next call. The per-column projections
+  of a rebuild are written concurrently from one cached scan.
 - Exactly-once: batch mode writes each file's rows into an
   ``ingest_batch=<file>`` partition under dynamic partition overwrite and
   commits the manifest LAST. A crash between the two writes leaves orphan
@@ -40,22 +52,30 @@ Scale design notes:
 
 from __future__ import annotations
 
+import contextlib
 import glob as _glob
+import hashlib
+import json
 import os
 import shutil
 import traceback
+from concurrent.futures import ThreadPoolExecutor
 from timeit import default_timer as _timer
 from typing import Any, Optional
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructField, StructType
+from pyspark.util import inheritable_thread_target
 
+from local_pubchem_db_spark.operators.util import driver_rows_df
 from local_pubchem_db_spark.plans.layout import (
     CompiledLayout,
     compile_layout,
     select_exprs,
 )
 from local_pubchem_db_spark.sources.manifest import (
+    MANIFEST_SCHEMA,
     manifest_rows_for,
     pending_files,
     read_manifest,
@@ -82,7 +102,8 @@ class PubChemDB:
 
     Directory layout: ``<base>/db/compounds`` (parquet),
     ``<base>/db/sdf_file`` (parquet manifest), ``<base>/db/idx_<col>``
-    (sorted covering projections for WITH_INDEX columns).
+    (sorted covering projections for WITH_INDEX columns) and
+    ``<base>/db/_idx_stamp.json`` (what those were built from).
     """
 
     def __init__(self, spark: SparkSession, base_dir: str):
@@ -90,6 +111,8 @@ class PubChemDB:
         self.db_dir = os.path.join(base_dir, "db")
         self.compounds_path = os.path.join(self.db_dir, "compounds")
         self.manifest_path = os.path.join(self.db_dir, "sdf_file")
+        # what the idx_* projections were built from (build_indexes)
+        self.index_stamp_path = os.path.join(self.db_dir, "_idx_stamp.json")
 
     # -- tables ---------------------------------------------------------
     def compounds(self) -> DataFrame:
@@ -163,6 +186,7 @@ def build_db(
                     shutil.rmtree(path)
             for idx in _glob.glob(os.path.join(db.db_dir, "idx_*")):
                 shutil.rmtree(idx)
+            _remove_stamp(db)
         os.makedirs(db.db_dir, exist_ok=True)
 
         pattern = "*.sdf.gz" if use_gzip else "*.sdf"
@@ -175,7 +199,7 @@ def build_db(
             start = _timer()
             parsed = read_sdf(spark, sdf_files)
             rows = compounds_plan(parsed, layout)
-            # Cache the batch so compounds write + manifest count share one
+            # Cache the batch so compounds write + manifest rows share one
             # materialization (two actions over the same plan).
             rows.persist()
             try:
@@ -190,17 +214,23 @@ def build_db(
                     .partitionBy("ingest_batch")
                     .parquet(db.compounds_path)
                 )
-                manifest = manifest_rows_for(
-                    rows.select("source_file"), sdf_files
+                # One collect of the batch's manifest rows (one per file)
+                # feeds both the manifest commit and the A17 progress lines
+                # (utils.py:319,324,134,162-163). The commit still comes
+                # after the compounds write. Files ingest concurrently in
+                # ONE job here (the reference loops them serially), so the
+                # wall time below is per batch, not per file.
+                logged = (
+                    manifest_rows_for(rows.select("source_file"), sdf_files)
+                    .orderBy("filename")
+                    .collect()
                 )
-                manifest.write.mode("append").parquet(db.manifest_path)
-                # A17 parity (utils.py:319,324,134,162-163): per-file
-                # progress + row counts, then the batch wall time. Files
-                # ingest concurrently in ONE job here (the reference loops
-                # them serially), so the wall time is per batch, not per
-                # file — the per-file rows come from the manifest already
-                # computed for this batch (one row per file, tiny collect).
-                logged = manifest.orderBy("filename").collect()
+                (
+                    driver_rows_df(spark, logged, MANIFEST_SCHEMA)
+                    .coalesce(1)
+                    .write.mode("append")
+                    .parquet(db.manifest_path)
+                )
                 for ii, r in enumerate(logged):
                     print(
                         "Processed sdf-file: %s (%d/%d): %d compounds"
@@ -229,27 +259,103 @@ def build_indexes(spark: SparkSession, db: PubChemDB, layout: CompiledLayout) ->
     parquet min/max stats then prune point/range lookups to a handful of
     row groups, the columnar analog of a B-tree index. Built after the full
     load, like the reference's deferred CREATE INDEX bulk-load pattern.
+
+    Rebuilt only when the compounds files change: if the stored stamp
+    (see ``_index_stamp``) matches and every ``idx_<col>/_SUCCESS`` exists,
+    this returns without launching a Spark job. Otherwise it deletes the
+    stamp, rebuilds every projection and writes the stamp last, so a crash
+    in between leaves no stamp and the next call rebuilds. A rebuild
+    caches the (indexed cols + pk) projection once and writes the
+    per-column projections concurrently, one driver thread per column.
     """
     if not layout.indexed_cols or not os.path.exists(db.compounds_path):
         return
+    stamp = _index_stamp(db, layout)
+    if _read_stamp(db) == stamp and all(
+        os.path.exists(os.path.join(db.db_dir, f"idx_{c}", "_SUCCESS"))
+        for c in layout.indexed_cols
+    ):
+        return
+    _remove_stamp(db)
     pk = layout.primary_key
     # one cached scan feeds every index projection instead of re-reading
-    # the table once per WITH_INDEX column
-    needed = set(layout.indexed_cols) | ({pk} - {None})
-    compounds = db.compounds().select(*sorted(needed)).persist()
+    # the table once per WITH_INDEX column; the layout gives the schema, so
+    # the read launches no footer-inference job
+    needed = sorted(set(layout.indexed_cols) | ({pk} - {None}))
+    schema = StructType(
+        [StructField(c, layout.columns[c].spark_type) for c in needed]
+    )
+    compounds = (
+        spark.read.schema(schema).parquet(db.compounds_path)
+        .select(*needed)
+        .persist()
+    )
+
+    def write_index(colname: str) -> None:
+        idx_path = os.path.join(db.db_dir, f"idx_{colname}")
+        if os.path.exists(idx_path):
+            shutil.rmtree(idx_path)
+        cols = [colname] if pk in (None, colname) else [colname, pk]
+        (
+            compounds.select(*cols)
+            .repartitionByRange(F.col(colname))
+            .sortWithinPartitions(colname)
+            .write.mode("overwrite")
+            .parquet(idx_path)
+        )
+
     try:
-        for colname in layout.indexed_cols:
-            idx_path = os.path.join(db.db_dir, f"idx_{colname}")
-            if os.path.exists(idx_path):
-                shutil.rmtree(idx_path)
-            cols = [colname] if pk in (None, colname) else [colname, pk]
-            (
-                compounds.select(*cols)
-                .repartitionByRange(F.col(colname))
-                .sortWithinPartitions(colname)
-                .write.mode("overwrite")
-                .parquet(idx_path)
-            )
-            print("Create index on '%s'." % colname)
+        compounds.count()
+        # the writes share the cache and are independent, so they run as
+        # concurrent jobs; inheritable targets keep the caller's job group
+        with ThreadPoolExecutor(max_workers=len(layout.indexed_cols)) as pool:
+            futures = [
+                pool.submit(inheritable_thread_target(spark)(write_index), c)
+                for c in layout.indexed_cols
+            ]
+            for colname, fut in zip(layout.indexed_cols, futures):
+                fut.result()
+                print("Create index on '%s'." % colname)
     finally:
         compounds.unpersist()
+    _write_stamp(db, stamp)
+
+
+def _index_stamp(db: PubChemDB, layout: CompiledLayout) -> dict[str, Any]:
+    """What the index projections were built from: the indexed columns,
+    the primary key and a digest of the compounds table's data file names
+    (relative, sorted). Writes never reuse a part-file name, so any change
+    to the table changes the digest. Names starting with "_" or "." are
+    Spark's metadata (_SUCCESS, _temporary, .crc), not data."""
+    files = []
+    for root, dirs, names in os.walk(db.compounds_path):
+        dirs[:] = [d for d in dirs if not d.startswith(("_", "."))]
+        rel = os.path.relpath(root, db.compounds_path)
+        files += [os.path.join(rel, n) for n in names if not n.startswith(("_", "."))]
+    return {
+        "indexed_cols": list(layout.indexed_cols),
+        "primary_key": layout.primary_key,
+        "compounds_files_sha256": hashlib.sha256(
+            "\n".join(sorted(files)).encode()
+        ).hexdigest(),
+    }
+
+
+def _read_stamp(db: PubChemDB) -> Optional[dict[str, Any]]:
+    try:
+        with open(db.index_stamp_path) as fh:
+            return json.load(fh)
+    except (OSError, ValueError):
+        return None
+
+
+def _write_stamp(db: PubChemDB, stamp: dict[str, Any]) -> None:
+    tmp = db.index_stamp_path + ".tmp"
+    with open(tmp, "w") as fh:
+        json.dump(stamp, fh)
+    os.replace(tmp, db.index_stamp_path)
+
+
+def _remove_stamp(db: PubChemDB) -> None:
+    with contextlib.suppress(FileNotFoundError):
+        os.remove(db.index_stamp_path)

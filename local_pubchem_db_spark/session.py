@@ -23,6 +23,10 @@ that survives a 1000-executor / 100 TB deployment:
   all codegen). Sessions from other factories keep their own policy —
   sources/sdf.py detects it and falls back to an explicit expression-level
   dedup instead of mutating foreign session state.
+- ``spark.executorEnv.PYTHONPATH`` = the directory holding this package:
+  a pandas UDF that references a package function unpickles it by
+  import on the Python workers, which otherwise find the package only
+  when the driver happens to run from the repository root.
 """
 
 from __future__ import annotations
@@ -32,6 +36,7 @@ import os
 from pyspark.sql import SparkSession
 
 DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def get_spark(
@@ -73,6 +78,7 @@ def get_spark(
         # higher via SPARK_GRAFT_DRIVER_MEM.
         "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"),
         "spark.ui.enabled": "false",
+        "spark.executorEnv.PYTHONPATH": PACKAGE_ROOT,
         "spark.sql.warehouse.dir": os.environ.get(
             "SPARK_GRAFT_WAREHOUSE", "/tmp/spark-warehouse"
         ),

@@ -2,10 +2,11 @@
 
 One row per fully-ingested file — the bookkeeping that makes builds
 incremental and resumable. The reference keeps it in SQLite and anti-joins
-in Python (utils.py:272-282); here it is a small Parquet table and the
-anti-join is a broadcast ``left_anti`` — at 100 TB the manifest stays tiny
-(one row per input shard), so pruning already-ingested files never
-shuffles the data side.
+in Python (utils.py:272-282); here it is a small Parquet table, and the
+anti-join is a set difference on the driver over its ``filename`` column,
+read in one Spark job with the schema given (no inference). At 100 TB the
+manifest stays tiny (one row per input shard), so pruning
+already-ingested files never touches the data side.
 
 Schema parity (utils.py:222-227, 327-332): filename is the basename
 (primary key), lowest_cid / highest_cid are parsed from the filename
@@ -59,30 +60,26 @@ def pending_files(
     """Files whose basename is not yet in the manifest, sorted.
 
     Reference parity: get_sdf_files_not_in_db (utils.py:272-282) + the
-    sorted-order processing guarantee (utils.py:282). The file list is tiny
-    metadata (one entry per shard) so the anti-join is a broadcast join; at
-    scale this is the partition-pruning analog — ingested shards are never
-    re-read.
+    sorted-order processing guarantee (utils.py:282). The manifest holds
+    one row per shard, so its ``filename`` column is collected in one job
+    (read through ``MANIFEST_SCHEMA``, which skips schema inference) and
+    the difference is taken on the driver; at scale this is the
+    partition-pruning analog — ingested shards are never re-read.
     """
     if not candidate_files:
         return []
     if not _exists(manifest_path):
         # fresh build / post-reset: nothing is ingested yet — skip the
-        # anti-join entirely (the empty-manifest join is semantically a
-        # no-op but costs the session's first-job startup, ~4 s cold)
+        # read entirely (it would cost the session's first job, ~4 s cold)
         return sorted(candidate_files)
-    manifest = read_manifest(spark, manifest_path).select("filename")
-    files_df = driver_rows_df(
-        spark,
-        [(f, os.path.basename(f)) for f in candidate_files],
-        "path string, filename string",
-    )
-    rows = (
-        files_df.join(F.broadcast(manifest), on="filename", how="left_anti")
-        .select("path")
+    ingested = {
+        r["filename"]
+        for r in spark.read.schema(MANIFEST_SCHEMA)
+        .parquet(manifest_path)
+        .select("filename")
         .collect()
-    )
-    return sorted(r["path"] for r in rows)
+    }
+    return sorted(f for f in candidate_files if os.path.basename(f) not in ingested)
 
 
 def manifest_rows_for(

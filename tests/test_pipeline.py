@@ -2,15 +2,24 @@
 
 Goldens from the reference (unittests_utils.py:207-334): 8 compounds,
 point lookups, NOT_NULL tightening → 5 rows with specific CIDs skipped,
-transform applied end-to-end, incremental manifest behavior.
+transform applied end-to-end, incremental manifest behavior. Also pins
+the incremental index build: an up-to-date DB costs no index job, and
+every change to the compounds files rebuilds the projections.
 """
 
+import glob
 import os
 import shutil
 
+import pyarrow.parquet as pq
 import pytest
+from pyspark.sql import functions as F
+from pyspark.sql.readwriter import DataFrameWriter
 
-from local_pubchem_db_spark.pipeline import PubChemDB, build_db
+from local_pubchem_db_spark.operators.util import driver_rows_df
+from local_pubchem_db_spark.pipeline import PubChemDB, build_db, build_indexes
+from local_pubchem_db_spark.plans.layout import compile_layout
+from local_pubchem_db_spark.sources.manifest import MANIFEST_SCHEMA, pending_files
 
 GOLD_INCHI_31040 = (
     "InChI=1S/C5H6O5.2Na/c6-3(5(9)10)1-2-4(7)8;;/h1-2H2,(H,7,8)(H,9,10);;/q;2*+1/p-2"
@@ -54,6 +63,48 @@ def specs(xlogp3_not_null=False, xlogp3_create_like=None):
     if xlogp3_create_like:
         s["columns"]["xlogp3"]["CREATE_LIKE"] = xlogp3_create_like
     return s
+
+
+def indexed_specs(*cols):
+    s = specs()
+    for c in cols:
+        s["columns"][c]["WITH_INDEX"] = True
+    return s
+
+
+def run_in_job_group(spark, group, fn):
+    """(fn(), number of Spark jobs fn launched), counted by job group."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setJobGroup("", "")
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def index_files(base):
+    """{part file: mtime} over every idx_* projection."""
+    return {
+        f: os.stat(f).st_mtime_ns
+        for f in glob.glob(os.path.join(base, "db", "idx_*", "*.parquet"))
+    }
+
+
+def assert_indexes_current(spark, base, cols):
+    """Each idx_<col> holds (col, cid) for exactly the compounds rows, and
+    every part file is sorted by col."""
+    want = PubChemDB(spark, base).compounds()
+    n = want.count()
+    for c in cols:
+        path = os.path.join(base, "db", f"idx_{c}")
+        idx = spark.read.parquet(path)
+        assert idx.columns == [c, "cid"]
+        assert idx.count() == n
+        assert sorted(idx.collect()) == sorted(want.select(c, "cid").collect())
+        for part in glob.glob(os.path.join(path, "*.parquet")):
+            values = pq.read_table(part).column(c).to_pylist()
+            assert values == sorted(values), part
 
 
 def test_db_import(spark, sdf_dir, tmp_path):
@@ -177,22 +228,133 @@ def test_crash_between_data_and_manifest_does_not_duplicate(
     # files and OVERWRITE their ingest_batch partitions — never append
     # duplicates (reference utils.py:322-332 rolls the file back; here the
     # partition is rewritten instead).
+    # The rewritten partitions have new file names, so the retry also
+    # rebuilds the index projections.
     base = make_base(tmp_path, sdf_dir)
-    assert build_db(base, use_gzip=True, reset=True, db_specs=specs(), spark=spark) == 0
+    s = indexed_specs("inchikey")
+    assert build_db(base, use_gzip=True, reset=True, db_specs=s, spark=spark) == 0
     db = PubChemDB(spark, base)
     assert db.compounds().count() == 8
+    before = index_files(base)
 
     # simulate the crash: the manifest write never happened
     shutil.rmtree(db.manifest_path)
-    assert (
-        build_db(base, use_gzip=True, reset=False, db_specs=specs(), spark=spark) == 0
-    )
+    assert build_db(base, use_gzip=True, reset=False, db_specs=s, spark=spark) == 0
     cids = sorted(r["cid"] for r in db.compounds().select("cid").collect())
     assert cids == [31038, 31039, 31040, 34516, 34517, 34518, 46773, 46774]
     assert db.sdf_file().count() == 3
+    assert set(index_files(base)).isdisjoint(before)
+    assert_indexes_current(spark, base, ["inchikey"])
 
     # and a normal incremental re-run after recovery stays a no-op
-    assert (
-        build_db(base, use_gzip=True, reset=False, db_specs=specs(), spark=spark) == 0
-    )
+    assert build_db(base, use_gzip=True, reset=False, db_specs=s, spark=spark) == 0
     assert db.compounds().count() == 8
+
+
+def test_noop_rerun_skips_index_build(spark, sdf_dir, tmp_path):
+    base = make_base(tmp_path, sdf_dir)
+    s = indexed_specs("inchikey", "InChI")
+    assert build_db(base, use_gzip=True, reset=True, db_specs=s, spark=spark) == 0
+    before = index_files(base)
+    assert before
+
+    # the whole no-op rerun is the one pending_files job
+    rc, jobs = run_in_job_group(
+        spark, "noop_build_db",
+        lambda: build_db(base, use_gzip=True, reset=False, db_specs=s, spark=spark),
+    )
+    assert (rc, jobs) == (0, 1)
+    db = PubChemDB(spark, base)
+    _, jobs = run_in_job_group(
+        spark, "noop_build_indexes",
+        lambda: build_indexes(spark, db, compile_layout(s)),
+    )
+    assert jobs == 0
+    assert index_files(base) == before
+    assert_indexes_current(spark, base, ["inchikey", "InChI"])
+
+
+def test_stale_indexes_rebuild(spark, sdf_dir, tmp_path, monkeypatch):
+    base = make_base(tmp_path, sdf_dir)
+    db = PubChemDB(spark, base)
+    s = indexed_specs("inchikey")
+    assert build_db(base, use_gzip=True, reset=True, db_specs=s, spark=spark) == 0
+    stamp = db.index_stamp_path
+    assert os.path.exists(stamp)
+
+    # a crash between the manifest commit and the index build leaves no
+    # stamp: the next call rebuilds, with one cache fill and the writes
+    os.remove(stamp)
+    before = index_files(base)
+    _, jobs = run_in_job_group(
+        spark, "stale_build_indexes",
+        lambda: build_indexes(spark, db, compile_layout(s)),
+    )
+    assert jobs > 1
+    assert os.path.exists(stamp)
+    assert set(index_files(base)).isdisjoint(before)
+    assert_indexes_current(spark, base, ["inchikey"])
+
+    # a projection without its _SUCCESS marker is rebuilt
+    os.remove(os.path.join(db.db_dir, "idx_inchikey", "_SUCCESS"))
+    before = index_files(base)
+    build_indexes(spark, db, compile_layout(s))
+    assert set(index_files(base)).isdisjoint(before)
+    assert_indexes_current(spark, base, ["inchikey"])
+
+    # a WITH_INDEX column added without reset; the first attempt crashes
+    # in an index write and leaves no stamp behind
+    s = indexed_specs("inchikey", "InChI")
+    write = DataFrameWriter.parquet
+
+    def crash_on_index(self, path, *args, **kwargs):
+        if "idx_InChI" in path:
+            raise OSError("injected crash")
+        return write(self, path, *args, **kwargs)
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", crash_on_index)
+    assert build_db(base, use_gzip=True, reset=False, db_specs=s, spark=spark) == 1
+    assert not os.path.exists(stamp)
+    monkeypatch.setattr(DataFrameWriter, "parquet", write)
+    before = index_files(base)
+    assert build_db(base, use_gzip=True, reset=False, db_specs=s, spark=spark) == 0
+    assert os.path.exists(stamp)
+    assert set(index_files(base)).isdisjoint(before)
+    assert_indexes_current(spark, base, ["inchikey", "InChI"])
+
+    # reset drops the stamp with the tables it describes
+    before = index_files(base)
+    assert build_db(base, use_gzip=True, reset=True, db_specs=s, spark=spark) == 0
+    assert set(index_files(base)).isdisjoint(before)
+    assert_indexes_current(spark, base, ["inchikey", "InChI"])
+
+
+def test_pending_files_one_job(spark, sdf_dir, tmp_path):
+    base = make_base(tmp_path, sdf_dir)
+    assert build_db(base, use_gzip=True, reset=True, db_specs=specs(), spark=spark) == 0
+    db = PubChemDB(spark, base)
+    landed = sorted(glob.glob(os.path.join(base, "sdf", "*.sdf.gz")))
+    new = [os.path.join(base, "sdf", "cmps_08_09.sdf.gz"),
+           os.path.join(base, "sdf", "cmps_10_11.sdf.gz")]
+    left, jobs = run_in_job_group(
+        spark, "pending_files",
+        lambda: pending_files(spark, db.manifest_path, new[::-1] + landed),
+    )
+    assert (left, jobs) == (new, 1)
+
+
+def test_pending_files_partitioned_manifest(spark, tmp_path):
+    # streaming/ingest.py writes the manifest partitioned by ingest_batch
+    manifest = str(tmp_path / "sdf_file")
+    rows = [("a_1_2.sdf.gz", 1, 2, "2024-01-01", 3),
+            ("b_3_4.sdf.gz", 3, 4, "2024-01-01", 0)]
+    for batch, row in enumerate(rows):
+        (
+            driver_rows_df(spark, [row], MANIFEST_SCHEMA)
+            .withColumn("ingest_batch", F.lit(batch))
+            .write.mode("append")
+            .partitionBy("ingest_batch")
+            .parquet(manifest)
+        )
+    candidates = ["/x/sdf/c_5_6.sdf.gz", "/x/sdf/b_3_4.sdf.gz", "/x/sdf/a_1_2.sdf.gz"]
+    assert pending_files(spark, manifest, candidates) == ["/x/sdf/c_5_6.sdf.gz"]
