@@ -24,6 +24,9 @@ from collections import OrderedDict
 from dataclasses import dataclass, field
 from typing import Any, Callable, Optional
 
+# module level, not inside _python_transform: with postponed annotations
+# pandas_udf resolves the ``pd.Series`` hints from the module's globals
+import pandas as pd
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
@@ -203,10 +206,7 @@ def _python_transform(source: str) -> Callable[[Column], Column]:
     parse_lambda(source)
 
     def apply(col: Column) -> Column:
-        import pandas as pd
-        from pyspark.sql.functions import pandas_udf
-
-        @pandas_udf("string")
+        @F.pandas_udf("string")
         def _udf(s: pd.Series) -> pd.Series:
             fn = eval(source)  # noqa: S307 - documented opt-in
             return s.map(lambda v: None if v is None else str(fn(v)))

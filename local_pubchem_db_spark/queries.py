@@ -512,6 +512,7 @@ def q_set_ops(spark, sf_dir):
 def q_exact_stats(spark, sf_dir):
     """C10 (exact twins): per-group COUNT(DISTINCT ...) + exact median
     (avg-of-middles on integral doubles — exact in both engines)."""
+    # Spark orders this Expand by hashes of each read's fresh attribute ids: <= 6 code variants
     return (
         t(spark, sf_dir, "lineitem")
         .groupBy("l_returnflag")

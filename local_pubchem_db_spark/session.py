@@ -27,6 +27,33 @@ that survives a 1000-executor / 100 TB deployment:
   a pandas UDF that references a package function unpickles it by
   import on the Python workers, which otherwise find the package only
   when the driver happens to run from the repository root.
+- ``spark.sql.codegen.cache.maxEntries=2048``: Spark keeps the classes it
+  generates and compiles (whole-stage code, projections, orderings) in
+  one JVM-wide LRU cache of 100 entries by default. One pass of the
+  benchmark's 20 registry rows compiles ~370 classes and all 60 rows
+  ~700 (measured at sf0.01 on 4 cores), so with 100 entries every class is
+  evicted before its query shape comes back: each call compiles it
+  again with Janino, and the JIT starts over on the new class. 2048
+  holds the whole registry's working set with room to spare;
+  ``extra_conf`` overrides it.
+- ``spark.sql.codegen.useIdInClassName=false``: whole-stage classes are
+  all named ``GeneratedIterator``. With the stage id in the name, a
+  stage whose id shifts (AQE numbers stages in the order it plans them)
+  is new code to the cache and compiles again.
+
+``get_spark`` also initialises Catalyst's ``CodeGenerator`` before it
+returns, on the calling thread with the new session active. The cache
+is a JVM singleton sized once, from ``SQLConf.get`` on the first thread
+that touches ``CodeGenerator``, and ``SQLConf.get`` returns the
+session's conf only on a thread where that session is active; elsewhere
+it returns the defaults. Left lazy, the first thread can be one without
+an active session. In the benchmark's threaded oracle pass (``toPandas``
+from a ``ThreadPoolExecutor``) it is the py4j thread serving a pool
+thread, generating code for ``operators.util.fan_out``'s
+``queryExecution().toRdd()`` partition probe, which runs outside any SQL
+execution: the cache got 100 entries whatever the conf said. A session
+that another factory built and ran queries on before ``get_spark`` has
+fixed the size already.
 """
 
 from __future__ import annotations
@@ -37,6 +64,7 @@ from pyspark.sql import SparkSession
 
 DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+CODEGEN_CACHE_ENTRIES = 2048
 
 
 def get_spark(
@@ -82,9 +110,32 @@ def get_spark(
         "spark.sql.warehouse.dir": os.environ.get(
             "SPARK_GRAFT_WAREHOUSE", "/tmp/spark-warehouse"
         ),
+        "spark.sql.codegen.cache.maxEntries": str(CODEGEN_CACHE_ENTRIES),
+        # whole-stage classes are named GeneratedIterator, not
+        # GeneratedIteratorForCodegenStage<id>: AQE numbers stages in the
+        # order it plans them, so the same stage's code otherwise differs
+        # (and misses the cache) when that order changes between calls
+        "spark.sql.codegen.useIdInClassName": "false",
     }
     if extra_conf:
         conf.update(extra_conf)
     for k, v in conf.items():
         builder = builder.config(k, v)
-    return builder.getOrCreate()
+    spark = builder.getOrCreate()
+    _init_codegen_cache(spark)
+    return spark
+
+
+def _init_codegen_cache(spark: SparkSession) -> None:
+    """Size the JVM-wide generated-code cache from this session's conf
+    (see the module docstring): initialise ``CodeGenerator`` now, on this
+    thread, with the session active. A no-op once it is initialised."""
+    jvm = spark._jvm
+    getattr(jvm, "org.apache.spark.sql.classic.SparkSession").setActiveSession(
+        spark._jsparkSession
+    )
+    jvm.java.lang.Class.forName(
+        "org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator$",
+        True,
+        jvm.org.apache.spark.util.Utils.getContextOrSparkClassLoader(),
+    )

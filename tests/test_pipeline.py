@@ -19,6 +19,7 @@ from pyspark.sql.readwriter import DataFrameWriter
 from local_pubchem_db_spark.operators.util import driver_rows_df
 from local_pubchem_db_spark.pipeline import PubChemDB, build_db, build_indexes
 from local_pubchem_db_spark.plans.layout import compile_layout
+from local_pubchem_db_spark.plans.transforms import TransformTranslationError
 from local_pubchem_db_spark.sources.manifest import MANIFEST_SCHEMA, pending_files
 
 GOLD_INCHI_31040 = (
@@ -157,6 +158,26 @@ def test_db_import_with_transform(spark, sdf_dir, tmp_path):
     assert (
         db.sql("SELECT inchikey FROM compounds WHERE cid == 34516").collect()[0][0]
         == "SISXGVIKZQKGLA-UHFFFAOYSA-N"
+    )
+
+
+def test_db_import_with_python_transform(spark, sdf_dir, tmp_path):
+    # a CREATE_LIKE the AST whitelist cannot translate runs through the
+    # opt-in pandas-UDF fallback
+    layout = specs()
+    layout["columns"]["inchikey"]["CREATE_LIKE"] = "lambda __x: __x.swapcase()"
+    with pytest.raises(TransformTranslationError):
+        compile_layout(layout)
+    base = make_base(tmp_path, sdf_dir)
+    assert (
+        build_db(base, use_gzip=True, reset=True, db_specs=layout,
+                 allow_python_transforms=True, spark=spark) == 0
+    )
+    db = PubChemDB(spark, base)
+    assert db.compounds().count() == 8
+    assert (
+        db.sql("SELECT inchikey FROM compounds WHERE cid == 34516").collect()[0][0]
+        == "sisxgvikzqkgla-uhfffaoysa-n"
     )
 
 
