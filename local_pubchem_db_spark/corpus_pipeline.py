@@ -103,9 +103,8 @@ def clean_corpus(
     exact-deduped relation is cached eagerly (``shared()`` — the LSH
     verify references its base relation three times and the keep/score
     consumers again, so one serial pass beats four replays of the
-    semi-join shuffle), the near-dedup stage counts its candidate-pair
-    relation for the broadcast gate, and connected components resolve
-    iteratively at call time; with ``dsir_target`` set there is
+    semi-join shuffle) and connected components resolve iteratively at
+    call time; with ``dsir_target`` set there is
     additionally one eager featurization of the (small, by contract)
     target corpus to fail fast on a token-less target. Ask for this
     function only when you intend to run the pipeline. Long-lived
@@ -136,14 +135,13 @@ def clean_corpus(
     # shared(): this relation's lineage (scan + filter UDF-set + the
     # semi-join shuffle) is referenced from FOUR-plus plan subtrees —
     # the fused LSH verify reads its base relation three times
-    # (bucketing + both text-fetch sides, see _lsh_verified_pairs) and
-    # the keep/score consumers read it again. Uncached, each subtree
+    # (bucketing + both text-fetch sides, see minhash_lsh_dedup_pairs)
+    # and the keep/score consumers read it again. Uncached, each subtree
     # replays the semi-join shuffle; cached, one pass computes it
     # (MEMORY_AND_DISK — spills, never OOMs). This also restores the
     # caching the r14 fused restructure removed when the shingle
     # relation (whose shared() sat downstream of this lineage) was
-    # eliminated — and lets the LSH text-broadcast gate measure its
-    # payload at memory speed (r15).
+    # eliminated.
     keep_ids = exact_dedup_by_content(filtered, "doc_id", "text").select(
         F.col("keep_id").alias("doc_id")
     )

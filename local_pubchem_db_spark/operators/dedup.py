@@ -23,14 +23,9 @@ Scale notes:
 
 from __future__ import annotations
 
-from threading import Thread
-from typing import NamedTuple
-from weakref import WeakKeyDictionary
-
 import pandas as pd
 from pyspark.sql import DataFrame, Column, Window
 from pyspark.sql import functions as F
-from pyspark.storagelevel import StorageLevel
 
 from local_pubchem_db_spark.functions.hashing import (
     hamming64,
@@ -40,7 +35,6 @@ from local_pubchem_db_spark.functions.hashing import (
 from local_pubchem_db_spark.functions.text import shingle_array_udf, tokens
 from local_pubchem_db_spark.operators.util import (
     fan_out,
-    register_session_memo,
     shared,
 )
 
@@ -101,31 +95,29 @@ def _verify_jaccard(cand: DataFrame, shingled: DataFrame, threshold: float) -> D
 
 
 def _verify_jaccard_from_texts(
-    cand: DataFrame,
-    rel: DataFrame,
-    shingle_len: int,
-    threshold: float,
-    *,
-    broadcast_cand: bool = False,
-    broadcast_half: bool = False,
+    cand: DataFrame, rel: DataFrame, shingle_len: int, threshold: float
 ) -> DataFrame:
-    """Exact-Jaccard verify from the candidate pairs' RAW TEXTS (r14/r15
-    plan shape, shared by the batch and incremental paths): join the
-    (id1, id2) candidates back to the (id, text) relation and compute
-    Jaccard with ``pair_jaccard_udf`` — pair-count-sized Python work,
-    ZERO corpus-sized shingle state. Bit-identical to the shingle-array
+    """Exact-Jaccard verify from the candidate pairs' RAW TEXTS, shared
+    by the batch and incremental paths: join the (id1, id2) candidates
+    back to the (id, text) relation and compute Jaccard with
+    ``pair_jaccard_udf`` — pair-count-sized Python work, ZERO
+    corpus-sized shingle state. Bit-identical to the shingle-array
     ``_verify_jaccard`` (same tokenizer, same exact-integer ratio;
-    pinned in tests). The broadcast flags are the r15 gate outcomes —
-    callers must pass True only under a measured size bound (see
-    ``_lsh_verified_pairs``); the default is plain shuffle joins."""
+    pinned in tests).
+
+    Both text-fetch joins are plain equi-joins, so AQE picks broadcast
+    or shuffle for each from the candidate side's runtime size. The pair
+    count grows with corpus size × near-dup density: a static broadcast
+    hint (which AQE cannot demote) would OOM a near-dup-heavy corpus,
+    and a driver-side size gate would cost a blocking count before the
+    plan exists."""
     from local_pubchem_db_spark.functions.text import pair_jaccard_udf
 
     a = rel.select(F.col("id").alias("id1"), F.col("text").alias("__t1"))
     b = rel.select(F.col("id").alias("id2"), F.col("text").alias("__t2"))
     jac = pair_jaccard_udf(shingle_len)(F.col("__t1"), F.col("__t2"))
-    half = a.join(F.broadcast(cand) if broadcast_cand else cand, "id1")
     return (
-        (F.broadcast(half) if broadcast_half else half)
+        a.join(cand, "id1")
         .join(b, "id2")
         .select("id1", "id2", jac.alias("jaccard"))
         .filter(F.col("jaccard") >= threshold)
@@ -377,93 +369,57 @@ def minhash_lsh_dedup_pairs(
 
     ``collapse_exact`` (default on — the production recipe): EXACT
     duplicates are collapsed to one representative per distinct text
-    BEFORE shingling, so the expensive tiers (shingle UDF, MinHash
-    signatures, bucket shuffle, Jaccard verification) run over unique
-    texts only; verified rep-level pairs then expand back to member
-    level. In a replica-flood corpus (the r7 sf3 replicas: 150k docs as
-    30-way exact clusters) this divides the heavy compute by the
-    duplication factor while emitting the identical pair relation:
-    identical text means identical shingle sets, so cross-group pairs
-    inherit the rep pair's exact jaccard and intra-group pairs are
-    jaccard 1.0 by construction (docs too short to shingle emit no
-    pairs, matching the brute-force oracle's null-jaccard exclusion).
-    ``max_bucket_size`` governs the expansions the same way it governs
-    buckets: an exact group above the cap contributes star+chain intra
-    edges and caps its cross-expansion membership — connectivity (and
-    so ``dedup_keep_ids`` components) preserved, output bounded.
+    BEFORE shingling, so the expensive tiers (MinHash signatures, bucket
+    shuffle, Jaccard verification) run over unique texts only; verified
+    rep-level pairs then expand back to member level. In a replica-flood
+    corpus (the r7 sf3 replicas: 150k docs as 30-way exact clusters)
+    this divides the heavy compute by the duplication factor while
+    emitting the identical pair relation: identical text means identical
+    shingle sets, so cross-group pairs inherit the rep pair's exact
+    jaccard and intra-group pairs are jaccard 1.0 by construction (docs
+    too short to shingle emit no pairs, matching the brute-force
+    oracle's null-jaccard exclusion). ``max_bucket_size`` governs the
+    expansions the same way it governs buckets: an exact group above the
+    cap contributes star+chain intra edges and caps its cross-expansion
+    membership — connectivity (and so ``dedup_keep_ids`` components)
+    preserved, output bounded.
+
+    Plan shape: one lazy plan — exact groups, then candidates
+    (``_fused_band_buckets`` → ``bounded_bucket_pairs``: the corpus
+    crosses into Python ONCE), then the verify joins, then the
+    expansion joins. Nothing is counted or collected to choose a shape:
+    every join strategy is AQE's runtime broadcast/shuffle choice, which
+    reads actual shuffle statistics and so broadcasts the small sides of
+    a typical corpus and shuffles them on a flood.
     """
-    if not collapse_exact:
+    if collapse_exact:
+        groups = _exact_groups(df, id_col, text_col)
+        rel = groups.select(F.col("gid").alias("id"), "text")
+    else:
+        # ``rel`` is read three times (bucketing + both text-fetch
+        # sides): three columnar scans of (id, text) — the price of
+        # holding ZERO corpus-sized state; a caller that cached its
+        # input (clean_corpus) reads it at memory speed instead.
         rel = df.select(F.col(id_col).alias("id"), F.col(text_col).alias("text"))
-        # A caller that pre-collapsed AND cached its relation (e.g.
-        # clean_corpus's shared() exact-deduped frame) gets the measured
-        # text-broadcast gate — the mean-octets aggregate scans the
-        # InMemoryRelation, not cold storage. Detection reads the INPUT
-        # frame's own storage level (the trivial projection above still
-        # resolves against the cached parent); a merely-derived-from-
-        # cached frame reports NONE and conservatively skips the gate.
-        lvl = df.storageLevel
-        return _lsh_verified_pairs(
-            rel,
-            shingle_len,
-            num_perm,
-            bands,
-            max_bucket_size,
-            threshold,
-            rel_cached=bool(lvl.useMemory or lvl.useDisk),
-        )
-    # lazy persist (r15 optimization round): the _dup_info probe below is
-    # the invocation's FIRST action and references groups in exactly one
-    # subtree, so ITS execution fills the cache — the separate eager
-    # count() job shared() would run is pure overhead here (the sf0.1
-    # phase profile charged it ~4 of the row's 18 stage-jobs).
-    groups = _exact_groups(df, id_col, text_col, eager=False)
-    # a group of identical too-short texts has no shingles and must
-    # emit no pairs (matching the brute-force null-jaccard exclusion);
-    # "has shingles" == word count >= shingle_len, computed JVM-side
-    # (same ASCII \s+ tokens as the shingle UDF) now that the full
-    # shingle relation is no longer materialized (r14)
-    valid_pred, valid_key = _shingleable(shingle_len)
-    # ONE memoized probe job for every per-invocation scalar (r15: dup
-    # sizing + the text-broadcast gate's mean octets used to be three
-    # separate aggregation jobs plus a second literal collect). r16
-    # (guide §2.6, VERDICT r15 Next #3): the literal-dup collect rides a
-    # driver thread, overlapping the candidate bucketing/count jobs
-    # _lsh_verified_pairs runs next — the probe aggregation has already
-    # filled the groups cache, so both sides read the InMemoryRelation
-    # and no fill race exists; resolve() joins the thread before the
-    # expansion needs the literal.
-    probe = _dup_info_start(
-        groups, valid_pred, max_bucket_size, valid_key=valid_key,
-        overlap=True,
+    cand = bounded_bucket_pairs(
+        _fused_band_buckets(rel, shingle_len, num_perm, bands),
+        ["band", "bucket"],
+        max_bucket_size=max_bucket_size,
     )
-    reps = groups.select(F.col("gid").alias("id"), "text")
-    rep_pairs = _lsh_verified_pairs(
-        reps,
-        shingle_len,
-        num_perm,
-        bands,
-        max_bucket_size,
-        threshold,
-        # reps projects the shared() cached exact-groups relation, so
-        # the text-gate's mean-octets measurement is memory-speed here
-        rel_cached=True,
-        mean_octets=probe.mean_octets,
-    )
-    info = probe.resolve()
-    # Warm-service fast path (r7 bench regression: the expansion joins
-    # ran every invocation even on corpora with no exact dups): the
-    # memoized dup-set sizing routes the expansion through the cheapest
-    # admissible shape — identity / plan literals / broadcast / shuffle
-    # (see _expand_collapsed).
-    return _expand_collapsed(
+    pairs = _verify_jaccard_from_texts(cand, rel, shingle_len, threshold)
+    if not collapse_exact:
+        return pairs
+    # a group of identical too-short texts has no shingles and must emit
+    # no intra pairs (the brute-force null-jaccard exclusion); "has
+    # shingles" == word count >= shingle_len, computed JVM-side with the
+    # shingle UDF's tokenizer
+    return _expand_rep_pairs(
         groups,
-        rep_pairs,
+        pairs,
         val_col="jaccard",
-        intra_column=F.lit(1.0),
-        intra_value=1.0,
-        valid_pred=valid_pred,
+        intra_val=F.lit(1.0),
+        valid=_word_count(F.col("text")) >= shingle_len,
         cap=max_bucket_size,
-        info=info,
     )
 
 
@@ -476,214 +432,10 @@ def _word_count(text: Column) -> Column:
     return F.size(F.filter(toks, lambda x: x != F.lit("")))
 
 
-def _shingleable(shingle_len: int) -> tuple[Column, str]:
-    """(predicate, memo key) for "this representative text has enough
-    tokens to shingle" — built TOGETHER so the ``_dup_info`` memo key
-    can never drift from the predicate it stands for (ADVICE r15: a
-    call site reusing a key string with a different predicate over the
-    same cached groups relation would silently serve the wrong memoized
-    dup structure). Any new validity predicate must get its own key
-    family here, never a recycled string."""
-    return _word_count(F.col("text")) >= shingle_len, f"wc>={shingle_len}"
-
-
-def _lsh_verified_pairs(
-    rel: DataFrame,
-    shingle_len: int,
-    num_perm: int,
-    bands: int,
-    max_bucket_size: int | None,
-    threshold: float,
-    *,
-    rel_cached: bool = False,
-    mean_octets: float | None = None,
-) -> DataFrame:
-    """Exact-verified LSH pairs over an (id, text) relation — the r14
-    plan shape (verdict Next #3, measured in MINHASH_r14): the corpus
-    crosses into Python ONCE through the fused text→band-buckets UDF
-    (``minhash_band_text_udf``), and exact Jaccard is computed from the
-    candidate pairs' RAW TEXTS with ``pair_jaccard_udf`` — the shingle
-    ARRAYS, previously a persisted corpus-sized relation feeding both
-    the signature and the verify sides, are never materialized at all.
-    The candidate relation is pair-count-sized, so re-shingling both
-    texts per pair in Python is noise next to the corpus-sized
-    materialization it replaces (a first cut that shingled
-    candidate-only ROWS via two semi-joins lost the savings to three
-    extra sequential job round-trips — measured, MINHASH_r14). The
-    text-fetch joins hint the candidate side broadcast — keeping the
-    corpus side map-only — but ONLY under measured-size gates (r15;
-    VERDICT r14 What's-wrong #1 / ADVICE medium): the candidate-pair
-    count scales with corpus size × near-dup density, so on a
-    near-dup-heavy 100 TB corpus the pair relation is billions of rows
-    and an explicit hint (which AQE cannot demote) would OOM the job.
-    The gate is the same policy ``_DUP_BROADCAST_LIMIT`` applies to the
-    dup-member joins, tiered by payload:
-
-    - id-only ``cand`` broadcasts iff its MEASURED row count is within
-      ``_LSH_PAIR_BROADCAST_LIMIT`` (1M pairs × ~24 B ≈ 24 MB — far
-      under the 8 GB hard limit);
-    - the text-carrying ``half`` broadcasts iff, additionally, count ×
-      (corpus mean text octets + row overhead) fits
-      ``_LSH_TEXT_BROADCAST_BYTES``. The mean is corpus-wide while the
-      candidate texts may skew long, so the 64 MB ceiling keeps two
-      orders of magnitude of margin under the hard limit (at bench
-      scale the payload is ~MBs, so the fast plan stays engaged).
-      The mean-octets aggregate reads the corpus text column, so it is
-      measured ONLY when ``rel_cached`` says the relation is already
-      in memory: the collapse path (``rel`` derives from the shared()
-      cached exact-groups relation), and any no-collapse caller whose
-      INPUT frame is itself persisted — ``minhash_lsh_dedup_pairs``
-      detects that via the frame's storage level (clean_corpus's
-      shared() exact-deduped relation is the production case). Either
-      way the aggregate is memory-speed. On a genuinely uncached
-      ``rel`` the text gate is simply not engaged (``half`` takes the
-      shuffle join, the shape that worked at scale pre-r14) rather
-      than paying a fourth cold columnar scan of the heaviest column
-      to decide an optimization (r15 review finding — the scan would
-      grow linearly with corpus size in exactly the mid-scale regime
-      where the pair gate passes).
-
-    Above a gate the join falls back to a plain shuffle join — the
-    pre-r14 verify shape, which is exactly what worked at scale before
-    the hints landed. Measuring the count means ``cand`` is persisted
-    and counted eagerly (pair-count-sized state, NOT corpus-sized —
-    MEMORY_AND_DISK spills rather than OOMs); the count doubles as the
-    eager fill preventing the sibling-subtree recompute race
-    ``shared()`` documents, so the corpus still crosses the band UDF
-    exactly once. The count is NOT memoized across invocations: a
-    stale small count on a grown corpus would re-engage the hint in
-    the OOM direction (the unsafe direction ``broadcast_if_small``
-    documents), and one pair-relation count per invocation is the
-    honest price of a safe gate.
-
-    Scan-count trade, stated: ``rel`` appears in three plan subtrees
-    (bucketing + both text-fetch sides), so the base relation is read
-    three times where the old plan read it once into a persisted
-    corpus-sized shingle relation. On the default collapse path ``rel``
-    is the shared() exact-groups relation (cached — re-reads are
-    memory-speed, and the text-gate's mean-octets aggregate adds a
-    fourth memory-speed read); on the no-collapse path with an
-    UNCACHED input they are three columnar scans of (id, text) —
-    exactly three, the text gate is skipped — the deliberate price of
-    holding ZERO corpus-sized state, which at 100 TB is the binding
-    constraint; a no-collapse caller that persisted its input
-    (clean_corpus) trades that state for memory-speed re-reads and
-    gets the measured gate back."""
-    buckets = _fused_band_buckets(rel, shingle_len, num_perm, bands)
-    cand = bounded_bucket_pairs(
-        buckets, ["band", "bucket"], max_bucket_size=max_bucket_size
-    ).persist(StorageLevel.MEMORY_AND_DISK)
-    n_pairs = cand.count()
-    broadcast_pairs = n_pairs <= _LSH_PAIR_BROADCAST_LIMIT
-    broadcast_texts = False
-    if broadcast_pairs and n_pairs > 0 and rel_cached:
-        # ``mean_octets`` is handed in by the collapse path (the
-        # _dup_info probe measures it in the same job as the dup
-        # sizing — r15); a cached no-collapse caller still measures it
-        # here with one tiny memory-speed aggregate.
-        if mean_octets is None:
-            mean_octets = (
-                rel.agg(F.avg(F.octet_length("text"))).first()[0] or 0.0
-            )
-        est_payload = n_pairs * (mean_octets + _LSH_PAIR_ROW_OVERHEAD)
-        # Driver-literal verify tier (r15 optimization round): a
-        # measured-tiny candidate set skips BOTH text-fetch joins —
-        # collect the pairs (persisted, just counted), fetch their
-        # texts with ONE in-memory isin scan, and verify over an
-        # Arrow-local relation. The execution plan loses its two
-        # sequential BroadcastExchange builds (measured 3 jobs -> 1 on
-        # the sf0.1 noop exec), the same bounded-collect pattern the
-        # expansion's literal tier already uses. Gates: pair count AND
-        # the estimated text payload (same corpus-mean basis as the
-        # broadcast gate, with a 16x tighter ceiling because this
-        # payload lands on the driver). Above a gate: the broadcast /
-        # shuffle joins below, unchanged — the 100 TB shape.
-        if (
-            n_pairs <= _LSH_DRIVER_VERIFY_PAIRS
-            and est_payload <= _LSH_DRIVER_VERIFY_BYTES
-        ):
-            return _verify_pairs_driver(cand, rel, shingle_len, threshold)
-        broadcast_texts = est_payload <= _LSH_TEXT_BROADCAST_BYTES
-    return _verify_jaccard_from_texts(
-        cand,
-        rel,
-        shingle_len,
-        threshold,
-        broadcast_cand=broadcast_pairs,
-        broadcast_half=broadcast_texts,
-    )
-
-
-def _verify_pairs_driver(
-    cand: DataFrame, rel: DataFrame, shingle_len: int, threshold: float
-) -> DataFrame:
-    """Exact-Jaccard verify of a measured-tiny candidate set over an
-    Arrow-local relation: pairs and their texts are collected (both
-    reads hit caches — ``cand`` is persisted and counted by the caller,
-    ``rel`` is the caller-vouched cached corpus projection), zipped
-    driver-side, and shipped back as ONE ``driver_rows_df`` local
-    relation feeding the same ``pair_jaccard_udf`` + threshold filter
-    as the join tiers — identical rows, no joins, no broadcast builds.
-    Callers gate on pair count and estimated payload
-    (``_LSH_DRIVER_VERIFY_PAIRS`` / ``_LSH_DRIVER_VERIFY_BYTES``)."""
-    from pyspark.sql.types import StringType, StructField, StructType
-
-    from local_pubchem_db_spark.functions.text import pair_jaccard_udf
-    from local_pubchem_db_spark.operators.util import driver_rows_df
-
-    pairs = cand.select("id1", "id2").collect()
-    ids = sorted({r["id1"] for r in pairs} | {r["id2"] for r in pairs})
-    texts = {
-        r["id"]: r["text"]
-        for r in rel.filter(F.col("id").isin(ids)).collect()
-    }
-    id_t = rel.schema["id"].dataType
-    schema = StructType(
-        [
-            StructField("id1", id_t),
-            StructField("id2", id_t),
-            StructField("__t1", StringType()),
-            StructField("__t2", StringType()),
-        ]
-    )
-    # ADVICE r15: a candidate id absent from ``rel`` is dropped, matching
-    # the join tiers' inner-join semantics (unreachable today — ``cand``
-    # derives from ``rel`` — but a future caller violating that must see
-    # the same rows the join tiers would emit, not a KeyError). The other
-    # documented divergence stands: duplicate ids in a no-collapse ``rel``
-    # collapse to ONE text here where the join tiers multiply rows; the
-    # tier is gated to the collapse path / cached-distinct callers where
-    # ids are unique by construction.
-    local = driver_rows_df(
-        cand.sparkSession,
-        [
-            (r["id1"], r["id2"], texts[r["id1"]], texts[r["id2"]])
-            for r in pairs
-            if r["id1"] in texts and r["id2"] in texts
-        ],
-        schema,
-    )
-    jac = pair_jaccard_udf(shingle_len)(F.col("__t1"), F.col("__t2"))
-    return local.select("id1", "id2", jac.alias("jaccard")).filter(
-        F.col("jaccard") >= threshold
-    )
-
-
-def _exact_groups(
-    df: DataFrame, id_col: str, text_col: str, eager: bool = True
-) -> DataFrame:
+def _exact_groups(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     """(gid, _ids, text): one row per DISTINCT text — sorted member ids
     (gid = minimum) plus one representative text. One shuffle produces
-    the whole group structure; shared() because the collapse consumers
-    reference it from 2-3 plan subtrees (reps + both expansions).
-
-    ``eager=False`` (r15): skip shared()'s cache-fill count when the
-    CALLER's first action is itself a single-subtree reference to this
-    relation (the _dup_info probe, an eager downstream shared()) — that
-    action then performs the fill, and the separate count job is saved.
-    The fill-race shared() documents only exists when the first action
-    references the relation from MULTIPLE subtrees; callers passing
-    False are asserting their action ordering avoids that."""
+    the whole group structure."""
     base = df.select(F.col(id_col).alias("id"), F.col(text_col).alias("text"))
     # NULL must stay its OWN group, distinct from '': the tokenizer gives
     # '' a phantom empty token (so two '' docs DO pair under SimHash)
@@ -691,7 +443,7 @@ def _exact_groups(
     # hand the '' group a NULL representative and silently drop its
     # pairs. md5(NULL) is NULL; the sentinel can never collide with a
     # real md5 hex digest.
-    return shared(
+    groups = (
         base.withColumn(
             "__h", F.coalesce(F.md5(F.col("text")), F.lit("<null>"))
         )
@@ -700,399 +452,16 @@ def _exact_groups(
             F.sort_array(F.collect_list("id")).alias("_ids"),
             F.min_by("text", "id").alias("text"),
         )
-        .select(F.element_at("_ids", 1).alias("gid"), "_ids", "text"),
-        eager=eager,
+        .select(F.element_at("_ids", 1).alias("gid"), "_ids", "text")
     )
-
-
-# LSH verify broadcast gates (r15 — see _lsh_verified_pairs docstring):
-# the id-only candidate-pair relation broadcasts under the same 1M-row
-# policy as _DUP_BROADCAST_LIMIT; the text-carrying side additionally
-# needs its ESTIMATED payload (measured pair count × corpus mean text
-# octets + per-row overhead) under a 64 MB ceiling — conservative by two
-# orders of magnitude vs the 8 GB broadcast hard limit, because the
-# estimate uses a corpus-wide mean while candidate texts can skew long.
-_LSH_PAIR_BROADCAST_LIMIT = 1_000_000
-_LSH_TEXT_BROADCAST_BYTES = 64 << 20
-_LSH_PAIR_ROW_OVERHEAD = 64  # UnsafeRow + hash-relation slot, per pair
-
-# Driver-literal verify tier (r15, see _verify_pairs_driver): both gates
-# must pass — a bounded pair count AND an estimated text payload a
-# driver collect can absorb without thought (4 MB against a 16 GB
-# driver; the corpus-mean basis can underestimate skewed candidate
-# texts, hence the 16x margin under the broadcast ceiling).
-_LSH_DRIVER_VERIFY_PAIRS = 4_096
-_LSH_DRIVER_VERIFY_BYTES = 4 << 20
-
-_DUP_BROADCAST_LIMIT = 1_000_000  # dup member ids that fit a broadcast
-_DUP_LITERAL_LIMIT = 1_024  # dup member ids that fit plan LITERALS
-_DUP_LITERAL_PAIR_LIMIT = 100_000  # driver-computed intra pairs cap
-
-# (canonical groups plan, canonical valid plan, cap) -> (CacheManager
-# entry, dup info), per session. The plan-string key is only a lookup
-# accelerator — plan strings HIDE LocalRelation data, so two different
-# in-memory corpora can share one (caught in test; the whole-file run
-# reused one corpus's dup set for another). Validity therefore rests on
-# the stored CacheManager ENTRY equaling the relation's current entry:
-# CachedData equality is structural over the analyzed plan INCLUDING
-# LocalRelation rows, so a different corpus can never validate. Dropped
-# by release_shared_caches. This is what makes the warm-service path
-# job-free: the dup set is a pure function of the cached relation.
-_DUP_MEMO: WeakKeyDictionary = WeakKeyDictionary()
-register_session_memo(_DUP_MEMO)
-
-
-def _plan_key(df: DataFrame) -> str | None:
-    try:
-        return (
-            df._jdf.queryExecution().analyzed().canonicalized().toString()
-        )
-    except Exception:  # noqa: BLE001 — internal API probe, fail open
-        return None
-
-
-def _cache_entry(df: DataFrame):
-    """The CacheManager's CachedData entry for this plan, or None."""
-    try:
-        opt = (
-            df.sparkSession._jsparkSession.sharedState()
-            .cacheManager()
-            .lookupCachedData(df._jdf)
-        )
-        return opt.get() if opt.isDefined() else None
-    except Exception:  # noqa: BLE001 — internal API probe, fail open
-        return None
-
-
-class DupInfo(NamedTuple):
-    """Per-invocation scalars of an ``_exact_groups`` relation, computed
-    in ONE aggregation job (r15: the dup sizing and the LSH text-gate's
-    mean octets used to be separate jobs): dup group count, total dup
-    member ids, the literal dup structure (when the dup set fits plan
-    literals, else None), and the mean text octet length over the
-    distinct-text representatives (the corpus-wide mean the
-    ``_LSH_TEXT_BROADCAST_BYTES`` gate multiplies by)."""
-
-    n_dup: int
-    dup_members: int
-    literal: dict | None
-    mean_octets: float
-
-
-class _DupProbe(NamedTuple):
-    """In-flight ``_dup_info`` probe (see ``_dup_info_start``): the
-    aggregation scalars are available immediately; ``resolve()`` joins
-    the (possibly threaded) literal-dup collect and returns the
-    completed, memoized ``DupInfo``."""
-
-    n_dup: int
-    dup_members: int
-    mean_octets: float
-    resolve: "object"  # Callable[[], DupInfo]
-
-
-def _dup_info_start(
-    groups: DataFrame,
-    valid: Column | DataFrame,
-    cap: int | None,
-    valid_key: str | None = None,
-    overlap: bool = False,
-) -> _DupProbe:
-    """Begin the ``DupInfo`` probe for a groups relation — memoized per
-    session on the canonicalized plan while the groups relation stays
-    cached, so a warm service re-invoking the same dedup pays ZERO jobs
-    here.
-
-    The probe is two driver actions: ONE aggregation job for the
-    scalars (dup count / member total / mean text octets — this is the
-    invocation's first action referencing ``groups`` from a single
-    subtree, so it also performs the lazy ``shared()`` cache fill), and,
-    when the measured dup set fits plan literals, a second collect for
-    the literal dup structure. With ``overlap=True`` (guide §2.6) that
-    second collect is submitted on a driver-side thread so it runs
-    CONCURRENTLY with whatever construction jobs the caller launches
-    next (candidate bucketing/count on the LSH path) — by the time the
-    thread starts, the aggregation has already filled the groups cache,
-    so both the thread and the caller's jobs read the InMemoryRelation
-    and the ``shared()`` fill race (first action referencing the
-    relation from multiple subtrees) cannot occur. The session memo is
-    read here and written only inside ``resolve()`` — both on the
-    CALLING thread — so the memo needs no lock; the background thread
-    performs exactly one cached-relation collect and touches no shared
-    state.
-
-    ``valid``: which gids may emit intra pairs — as a boolean COLUMN
-    over the groups row (the callers' validity is always a row-local
-    predicate on the representative text, so the literal path resolves
-    it in the same collect), or as a gid DataFrame (legacy form, pays a
-    second membership collect).
-
-    ``valid_key``: stable memo-key component for a Column ``valid`` —
-    required for warm-path memo HITS because a Column's repr embeds
-    fresh lambda-variable ids per construction (``_word_count``'s
-    higher-order filter), so ``str(valid)`` never repeats. The caller
-    must choose a key that uniquely determines the predicate (e.g.
-    ``f"wc>={shingle_len}"``); as everywhere in this memo, validity
-    still rests on the stored CacheManager entry equaling the groups
-    relation's current entry, so a key can never bleed across corpora."""
-    memo = _DUP_MEMO.setdefault(groups.sparkSession, {})
-    gk = _plan_key(groups)
-    if isinstance(valid, Column):
-        vk = valid_key if valid_key is not None else str(valid)
-    else:
-        vk = _plan_key(valid)
-    key = (gk, vk, cap) if gk is not None and vk is not None else None
-    entry = _cache_entry(groups) if key is not None else None
-    if key is not None and entry is not None:
-        hit = memo.get(key)
-        if hit is not None:
-            stored_entry, info = hit
-            try:
-                if stored_entry.equals(entry):
-                    return _DupProbe(
-                        info.n_dup,
-                        info.dup_members,
-                        info.mean_octets,
-                        lambda: info,
-                    )
-            except Exception:  # noqa: BLE001 — stale JVM ref: recompute
-                pass
-    n_dup, dup_members, mean_octets = groups.agg(
-        F.count(F.when(F.size("_ids") > 1, 1)),
-        F.coalesce(
-            F.sum(F.when(F.size("_ids") > 1, F.size("_ids"))), F.lit(0)
-        ),
-        F.avg(F.octet_length("text")),
-    ).first()
-    want_literal = 0 < dup_members <= _DUP_LITERAL_LIMIT
-    thread = None
-    box: dict = {}
-    if want_literal and overlap:
-
-        def _run() -> None:
-            try:
-                box["literal"] = _collect_literal_dups(groups, valid, cap)
-            except BaseException as e:  # noqa: BLE001 — re-raised at resolve
-                box["err"] = e
-
-        thread = Thread(target=_run, name="dup-literal-collect", daemon=True)
-        thread.start()
-
-    def resolve() -> DupInfo:
-        if thread is not None:
-            thread.join()
-            if "err" in box:
-                raise box["err"]
-            literal = box["literal"]
-        elif want_literal:
-            literal = _collect_literal_dups(groups, valid, cap)
-        else:
-            literal = None
-        out = DupInfo(n_dup, dup_members, literal, float(mean_octets or 0.0))
-        if key is not None and entry is not None:
-            memo[key] = (entry, out)
-        return out
-
-    return _DupProbe(n_dup, dup_members, float(mean_octets or 0.0), resolve)
-
-
-def _dup_info(
-    groups: DataFrame,
-    valid: Column | DataFrame,
-    cap: int | None,
-    valid_key: str | None = None,
-) -> DupInfo:
-    """Sequential ``_dup_info_start`` + ``resolve()`` — the form for
-    callers with no construction work to overlap the literal collect
-    with."""
-    return _dup_info_start(
-        groups, valid, cap, valid_key=valid_key
-    ).resolve()
-
-
-def _collect_literal_dups(
-    groups: DataFrame, valid: Column | DataFrame, cap: int | None
-) -> dict | None:
-    """Collect the (small, caller-gated) dup groups to the driver and
-    precompute both expansion halves: the gid -> capped member list map
-    for the cross expansion, and the intra pair list under the SAME cap
-    policy as ``_capped_pairs`` (all pairs within the cap, star+chain
-    above it; ``cap=None`` exhaustive). Returns None if the intra pair
-    count would exceed the literal budget (e.g. cap=None over a large
-    group — quadratic output belongs on executors).
-
-    With a Column ``valid`` the gid validity resolves inside the SAME
-    collect (one job); the DataFrame form keeps the r14 two-collect
-    shape."""
-    if isinstance(valid, Column):
-        rows = (
-            groups.filter(F.size("_ids") > 1)
-            .select("gid", "_ids", valid.alias("_v"))
-            .collect()
-        )
-        members = {r["gid"]: list(r["_ids"]) for r in rows}
-        valid_set = {r["gid"] for r in rows if r["_v"]}
-    else:
-        rows = (
-            groups.filter(F.size("_ids") > 1).select("gid", "_ids").collect()
-        )
-        members = {r["gid"]: list(r["_ids"]) for r in rows}
-        valid_set = {
-            r["gid"]
-            for r in valid.filter(
-                F.col("gid").isin(list(members))
-            ).collect()
-        }
-    intra: list[tuple] = []
-    for g, ids in members.items():
-        if g not in valid_set:
-            continue
-        if cap is None or len(ids) <= cap:
-            intra.extend(
-                (a, b) for i, a in enumerate(ids) for b in ids[i + 1 :]
-            )
-        else:  # star + chain, exactly as _star_chain_expr emits
-            root = ids[0]
-            for i in range(1, len(ids)):
-                intra.append((root, ids[i]))
-                if i >= 2 and ids[i - 1] != root:
-                    intra.append((ids[i - 1], ids[i]))
-        if len(intra) > _DUP_LITERAL_PAIR_LIMIT:
-            return None
-    cross = {
-        g: (ids if cap is None else ids[:cap]) for g, ids in members.items()
-    }
-    return {"cross": cross, "intra": intra}
-
-
-def _expand_rep_pairs_literal(
-    rep_pairs: DataFrame, literal: dict, val_col: str, intra_value
-) -> DataFrame:
-    """The warm-service expansion: the dup structure rides the PLAN as
-    literals — cross pairs via a literal gid -> members map (coalesce to
-    the rep's own id for singletons) + explode, intra pairs as a local
-    relation — so re-executing the plan runs no extra jobs and builds
-    no broadcasts (the r8 broadcast-hinted joins still re-collected
-    three broadcast exchanges per action). element_at on a literal map
-    is a linear scan per row, fine because rep_pairs is the verified
-    rep-level pair relation (small by construction) and the map is
-    caller-gated to <= _DUP_LITERAL_LIMIT entries."""
-    from pyspark.sql.types import StructField, StructType
-
-    spark = rep_pairs.sparkSession
-    id_t = rep_pairs.schema["id1"].dataType
-    val_t = rep_pairs.schema[val_col].dataType
-    cross = literal["cross"]
-    keys = sorted(cross)
-    m_map = F.map_from_arrays(
-        F.array(*[F.lit(g).cast(id_t) for g in keys]),
-        F.array(
-            *[
-                F.array(*[F.lit(m).cast(id_t) for m in cross[g]])
-                for g in keys
-            ]
-        ),
-    )
-
-    def expand(side: str):
-        return F.explode(
-            F.coalesce(
-                F.element_at(m_map, F.col(side)), F.array(F.col(side))
-            )
-        )
-
-    out = (
-        rep_pairs.select("id2", expand("id1").alias("a"), F.col(val_col))
-        .select("a", expand("id2").alias("b"), F.col(val_col))
-        .select(
-            F.least("a", "b").alias("id1"),
-            F.greatest("a", "b").alias("id2"),
-            val_col,
-        )
-    )
-    pairs = literal["intra"]
-    if len(pairs) <= 256:
-        # tiny intra sets ride the plan as one literal struct array over
-        # a 1-row range — createDataFrame costs ~0.1s of Arrow/py4j
-        # per call, real money on the warm path this mode exists for
-        if not pairs:
-            return out
-        structs = F.array(
-            *[
-                F.struct(
-                    F.lit(a).cast(id_t).alias("id1"),
-                    F.lit(b).cast(id_t).alias("id2"),
-                    F.lit(intra_value).cast(val_t).alias(val_col),
-                )
-                for a, b in pairs
-            ]
-        )
-        intra = spark.range(1).select(F.explode(structs).alias("_p")).select(
-            "_p.id1", "_p.id2", f"_p.{val_col}"
-        )
-        return out.unionByName(intra)
-    schema = StructType(
-        [
-            StructField("id1", id_t),
-            StructField("id2", id_t),
-            StructField(val_col, val_t),
-        ]
-    )
-    from local_pubchem_db_spark.operators.util import driver_rows_df
-
-    intra = driver_rows_df(
-        spark, [(a, b, intra_value) for a, b in pairs], schema
-    )
-    return out.unionByName(intra)
-
-
-def _expand_collapsed(
-    groups: DataFrame,
-    rep_pairs: DataFrame,
-    val_col: str,
-    intra_column: Column,
-    intra_value,
-    valid_gids: DataFrame | None = None,
-    cap: int | None = None,
-    *,
-    valid_pred: Column | None = None,
-    valid_key: str | None = None,
-    info: DupInfo | None = None,
-) -> DataFrame:
-    """Route the member expansion through the cheapest shape the dup
-    set admits: identity (no dups), plan literals (small — job-free on
-    warm re-invocation), broadcast joins (medium), shuffle joins
-    (flood). All four pinned output-identical in
-    tests/test_lsh_bucket_cap.py.
-
-    Validity comes as ``valid_pred`` (a boolean column over the groups
-    row — the fast one-collect literal path) or the legacy
-    ``valid_gids`` gid DataFrame; exactly one must be given. ``info``:
-    a ``DupInfo`` the caller already probed for the same
-    (groups, validity, cap) — skips the memo lookup's plan-key round
-    trip (the probe itself is memoized either way)."""
-    if (valid_pred is None) == (valid_gids is None):
-        raise ValueError("pass exactly one of valid_pred / valid_gids")
-    valid = valid_pred if valid_pred is not None else valid_gids
-    if info is None:
-        info = _dup_info(groups, valid, cap, valid_key=valid_key)
-    if info.n_dup == 0:
-        return rep_pairs
-    if info.literal is not None:
-        return _expand_rep_pairs_literal(
-            rep_pairs, info.literal, val_col, intra_value
-        )
-    if valid_gids is None:
-        valid_gids = groups.filter(valid_pred).select("gid")
-    return _expand_rep_pairs(
-        groups,
-        rep_pairs,
-        val_col=val_col,
-        intra_val=intra_column,
-        valid_gids=valid_gids,
-        cap=cap,
-        broadcast_dups=info.dup_members <= _DUP_BROADCAST_LIMIT,
-    )
+    # Cached lazily: the collapse plans read this relation from up to six
+    # subtrees (bucketing, both text fetches, the expansion joins), and
+    # the first action fills the cache without a separate count job. A/B
+    # on 4 cores, 8 interleaved cold reps, median s lazy / eager count /
+    # uncached: MinHash 1.93 / 2.21 / 2.52 and SimHash 2.11 / 2.37 / 2.10
+    # on sf0.01-shaped tables; at sf0.1 MinHash 2.78 / 2.53 / 2.82 and
+    # SimHash 2.92 / 3.13 / 3.19 — lazy has the fewest construction jobs.
+    return shared(groups, eager=False)
 
 
 def _expand_rep_pairs(
@@ -1100,53 +469,42 @@ def _expand_rep_pairs(
     rep_pairs: DataFrame,
     val_col: str,
     intra_val: Column,
-    valid_gids: DataFrame,
+    valid: Column,
     cap: int | None,
-    broadcast_dups: bool = False,
 ) -> DataFrame:
     """Member-level (id1 < id2, val) pairs from representative-level
     pairs over ``_exact_groups``: cross-group pairs inherit the rep
     pair's value (identical text = identical features), intra-group
     pairs get ``intra_val`` (the self-similarity of identical content),
-    gated on ``valid_gids`` (groups whose rep produced features at all).
-    ``cap`` bounds both expansions the way ``bounded_bucket_pairs``
-    bounds buckets: an exact group above it contributes star+chain intra
-    edges and a capped cross-membership — connectivity (so component
-    resolution) preserved, output volume bounded.
+    only for groups whose row satisfies ``valid`` (a predicate over the
+    groups row: the rep produced features at all). ``cap`` bounds both
+    expansions the way ``bounded_bucket_pairs`` bounds buckets: an exact
+    group above it contributes star+chain intra edges and a capped
+    cross-membership — connectivity (so component resolution)
+    preserved, output volume bounded.
 
-    Join shape: only DUP groups (size > 1) enter the expansion joins —
+    Join shape: only DUP groups (size > 1) enter the expansion —
     singleton groups expand to themselves, so a LEFT join + coalesce to
     the rep's own id covers them without shipping the (corpus-sized)
-    full group relation through two joins. On typical corpora the dup
-    relation is a sliver of the groups; on a replica flood it is the
-    whole corpus and the joins shuffle exactly what they must.
-    ``broadcast_dups`` (caller gates it on the measured dup-member count)
-    hints every dup-side join relation as a broadcast, turning the whole
-    expansion map-only — the warm-service shape, where re-running AQE
-    exchange stages per invocation was the r7 bench regression."""
-    members = groups.filter(F.size("_ids") > 1).select(
+    full group relation through two joins. Both joins are plain: AQE
+    broadcasts the dup side when its runtime size is small (typical
+    corpora, where dups are a sliver or absent) and shuffles it on a
+    replica flood, where the dup side is the whole corpus."""
+    dups = groups.filter(F.size("_ids") > 1)
+    members = dups.select(
         "gid",
         (F.col("_ids") if cap is None else F.slice("_ids", 1, cap)).alias(
             "_m"
         ),
     )
-    bcast = F.broadcast if broadcast_dups else (lambda d: d)
     cross = (
         rep_pairs.join(
-            bcast(
-                members.select(
-                    F.col("gid").alias("id1"), F.col("_m").alias("_m1")
-                )
-            ),
+            members.select(F.col("gid").alias("id1"), F.col("_m").alias("_m1")),
             "id1",
             "left",
         )
         .join(
-            bcast(
-                members.select(
-                    F.col("gid").alias("id2"), F.col("_m").alias("_m2")
-                )
-            ),
+            members.select(F.col("gid").alias("id2"), F.col("_m").alias("_m2")),
             "id2",
             "left",
         )
@@ -1167,18 +525,9 @@ def _expand_rep_pairs(
             val_col,
         )
     )
-    dups = groups.filter(F.size("_ids") > 1)
-    if broadcast_dups:
-        # same relation as the semi join below, but with the SMALL side
-        # broadcast (Spark cannot broadcast the left of a left_semi):
-        # valid_gids has one row per gid, so the inner join is exactly
-        # "dups whose gid is valid"
-        dup_groups = valid_gids.join(F.broadcast(dups), "gid")
-    else:
-        dup_groups = dups.join(valid_gids, "gid", "left_semi")
     # same cap policy (and memory-safe exhaustive hybrid) as the bucket
     # expansion, via the one shared helper
-    intra = _capped_pairs(dup_groups, ["gid"], cap).select(
+    intra = _capped_pairs(dups.filter(valid), ["gid"], cap).select(
         "id1", "id2", intra_val.alias(val_col)
     )
     return cross.unionByName(intra)
@@ -1296,31 +645,9 @@ def incremental_minhash_new_ids(
     ``minhash_lsh_dedup_pairs`` keeps the cap on by default because there
     the keep-set is provably preserved.
     """
-    # lazy persist (r15): the _dup_info probe below is the first action
-    # and references groups once — its execution fills the cache, so the
-    # separate shared() count job is saved (see _exact_groups).
-    groups = (
-        _exact_groups(batch, id_col, text_col, eager=False)
-        if collapse_exact
-        else None
-    )
-    n_dup = dup_members = 0
     if collapse_exact:
-        # the memoized dup-set sizing gates both expansions below: a
-        # batch with no exact dups skips them entirely (rep ids ARE the
-        # member ids), a small dup set rides plan literals or broadcast
-        # hints — same routing as minhash_lsh_dedup_pairs
+        groups = _exact_groups(batch, id_col, text_col)
         rel = groups.select(F.col("gid").alias("id"), "text")
-        valid_pred, valid_key = _shingleable(shingle_len)
-        # r16: same literal-collect overlap as minhash_lsh_dedup_pairs —
-        # the probe agg fills the groups cache, then the literal collect
-        # runs concurrently with the bucket shared() fill / history
-        # semi-joins below; resolved right before _expand_collapsed.
-        probe = _dup_info_start(
-            groups, valid_pred, max_bucket_size, valid_key=valid_key,
-            overlap=True,
-        )
-        n_dup, dup_members = probe.n_dup, probe.dup_members
     else:
         rel = batch.select(
             F.col(id_col).alias("id"), F.col(text_col).alias("text")
@@ -1353,14 +680,11 @@ def incremental_minhash_new_ids(
         for h in hit_ids[1:]:
             vs_history = vs_history.unionByName(h)
         vs_history = vs_history.distinct()
-        if collapse_exact and n_dup:
+        if collapse_exact:
             # a rep-level hit means every member of its exact group
             # would have hit (identical signatures -> identical
-            # buckets): expand with the FULL member list, never capped.
-            # With zero dup groups the join is the identity — skipped.
+            # buckets): expand with the FULL member list, never capped
             dups = groups.filter(F.size("_ids") > 1).select("gid", "_ids")
-            if dup_members <= _DUP_BROADCAST_LIMIT:
-                dups = F.broadcast(dups)
             vs_history = (
                 vs_history.withColumnRenamed("id", "gid")
                 .join(dups, "gid", "left")
@@ -1378,21 +702,17 @@ def incremental_minhash_new_ids(
     cand = bounded_bucket_pairs(
         buckets, ["band", "bucket"], max_bucket_size=max_bucket_size
     )
-    # pair-text exact verify (r15): candidates join back to the batch
-    # texts — no shingle relation, and no broadcast hints here (the
-    # incremental contract keeps batches small; plain joins let AQE
-    # pick the strategy from runtime stats)
+    # pair-text exact verify: candidates join back to the batch texts —
+    # no shingle relation
     vpairs = _verify_jaccard_from_texts(cand, rel, shingle_len, threshold)
-    if collapse_exact and n_dup:
-        vpairs = _expand_collapsed(
+    if collapse_exact:
+        vpairs = _expand_rep_pairs(
             groups,
             vpairs,
             val_col="jaccard",
-            intra_column=F.lit(1.0),
-            intra_value=1.0,
-            valid_pred=valid_pred,
+            intra_val=F.lit(1.0),
+            valid=_word_count(F.col("text")) >= shingle_len,
             cap=max_bucket_size,
-            info=probe.resolve(),
         )
     if quality_col is None:
         dup_in_batch = vpairs.select(F.col("id2").alias("id")).distinct()
@@ -1669,10 +989,7 @@ def simhash_dedup_pairs(
     means the member expansions are exhaustive too.
     """
     if collapse_exact:
-        # lazy persist (r15): the recursive call's shared() SimHash
-        # relation is the first action referencing groups (single
-        # subtree) — its eager count fills the cache.
-        groups = _exact_groups(df, id_col, text_col, eager=False)
+        groups = _exact_groups(df, id_col, text_col)
         rep_pairs = simhash_dedup_pairs(
             groups.select(F.col("gid").alias("id"), "text"),
             "id",
@@ -1681,19 +998,15 @@ def simhash_dedup_pairs(
             max_bucket_size=max_bucket_size,
             collapse_exact=False,
         )
-        # same warm-path routing as minhash_lsh_dedup_pairs:
-        # identity / literal / broadcast / shuffle by dup-set size.
-        # valid gids: reps with >=1 token — exactly the SimHash non-null
-        # condition (hashing.simhash_udf: "null/empty token arrays hash
-        # to NULL"), without re-running the hash UDF
-        return _expand_collapsed(
+        # valid groups: reps with >=1 token — exactly the SimHash
+        # non-null condition (hashing.simhash_udf: "null/empty token
+        # arrays hash to NULL"), without re-running the hash UDF
+        return _expand_rep_pairs(
             groups,
             rep_pairs,
             val_col="hamming",
-            intra_column=F.lit(0).cast("int"),
-            intra_value=0,
-            valid_pred=F.size(tokens(F.col("text"))) > 0,
-            valid_key="ntokens>0",
+            intra_val=F.lit(0).cast("int"),
+            valid=F.size(tokens(F.col("text"))) > 0,
             cap=max_bucket_size,
         )
     # SimHash as one vectorized map (see hashing.simhash_udf); shared():

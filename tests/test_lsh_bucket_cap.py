@@ -37,6 +37,38 @@ def _components(pairs):
     return {x: find(x) for x in parent}
 
 
+def _flood_rows(offset=0):
+    """1000 identical documents + 3 distinct ones (ids from ``offset``)."""
+    dup_text = (
+        "spark structured streaming maintains state across micro batches "
+        "with watermarks bounding how late data may arrive for each window"
+    )
+    distinct = [
+        "completely different first document about parquet row groups",
+        "another unrelated text concerning broadcast hash joins in planners",
+        "a third standalone note on adaptive query execution partitions",
+    ]
+    return [(offset + i, dup_text) for i in range(1000)] + [
+        (offset + 1000 + i, t) for i, t in enumerate(distinct)
+    ]
+
+
+def _adversarial_rows():
+    """NULL texts, empty strings, whitespace-only, mixed dup
+    multiplicities, too-short texts and a near-dup (not exact) cluster."""
+    long_a = " ".join(f"alpha{i} beta gamma delta" for i in range(40))
+    long_b = long_a + " extra token tail"  # near-dup of long_a
+    return (
+        [(i, None) for i in (1, 2, 3)]
+        + [(i, "") for i in (10, 11)]
+        + [(i, "   \t ") for i in (20, 21)]
+        + [(100 + i, long_a) for i in range(4)]
+        + [(200 + i, long_b) for i in range(2)]
+        + [(i, "tiny") for i in (300, 301, 302)]
+        + [(400, " ".join(f"unique{i} zeta eta" for i in range(40)))]
+    )
+
+
 def test_bounded_bucket_pairs_caps_oversized_bucket(spark):
     # One 1000-member bucket (oversized) + one 5-member bucket (small).
     rows = [(i, 0, 7) for i in range(1000)] + [(1000 + i, 1, 9) for i in range(5)]
@@ -72,19 +104,7 @@ def test_minhash_thousand_way_cluster_keeps_one(spark):
     # 1000 identical documents + 3 distinct ones: the capped LSH path must
     # still resolve the flood to a single representative, and candidate
     # volume must stay linear in the cluster size.
-    dup_text = (
-        "spark structured streaming maintains state across micro batches "
-        "with watermarks bounding how late data may arrive for each window"
-    )
-    distinct = [
-        "completely different first document about parquet row groups",
-        "another unrelated text concerning broadcast hash joins in planners",
-        "a third standalone note on adaptive query execution partitions",
-    ]
-    rows = [(i, dup_text) for i in range(1000)] + [
-        (1000 + i, t) for i, t in enumerate(distinct)
-    ]
-    df = spark.createDataFrame(rows, "doc_id long, text string")
+    df = spark.createDataFrame(_flood_rows(), "doc_id long, text string")
 
     pairs = minhash_lsh_dedup_pairs(df, "doc_id", "text", threshold=0.8)
     n_pairs = pairs.count()
@@ -294,18 +314,9 @@ def test_collapse_equivalence_on_adversarial_corpus(spark):
         simhash_dedup_pairs,
     )
 
-    long_a = " ".join(f"alpha{i} beta gamma delta" for i in range(40))
-    long_b = long_a + " extra token tail"  # near-dup of long_a
-    rows = (
-        [(i, None) for i in (1, 2, 3)]
-        + [(i, "") for i in (10, 11)]
-        + [(i, "   \t ") for i in (20, 21)]
-        + [(100 + i, long_a) for i in range(4)]
-        + [(200 + i, long_b) for i in range(2)]
-        + [(i, "tiny") for i in (300, 301, 302)]
-        + [(400, " ".join(f"unique{i} zeta eta" for i in range(40)))]
+    corpus = spark.createDataFrame(
+        _adversarial_rows(), "doc_id long, text string"
     )
-    corpus = spark.createDataFrame(rows, "doc_id long, text string")
 
     mh = lambda c: sorted(
         (r["id1"], r["id2"], round(r["jaccard"], 12))
@@ -343,11 +354,12 @@ def test_collapse_equivalence_on_adversarial_corpus(spark):
     assert (10, 11, 0) in sh_direct and (300, 301, 0) in sh_direct
 
 
-def test_collapse_fast_paths_match_shuffle_path(spark, monkeypatch):
-    """The r8 expansion routing must be plan-shape-only: a corpus with
-    NO exact dups short-circuits the expansion; with dups, the literal,
-    broadcast, and shuffle shapes (forced by shutting each gate) all
-    equal the direct path."""
+def test_collapse_fast_paths_match_shuffle_path(spark):
+    """The collapsed path must equal the direct path whatever the dup
+    set looks like — a corpus with NO exact dups (the expansion joins
+    find no dup group) and one with a small dup group — and a warm
+    re-invocation over the still-cached groups relation must emit the
+    same rows as the cold one."""
     from local_pubchem_db_spark.operators import dedup as D
     from local_pubchem_db_spark.operators.util import (
         release_shared_caches,
@@ -373,23 +385,20 @@ def test_collapse_fast_paths_match_shuffle_path(spark, monkeypatch):
             "doc_id long, text string",
         )
     )
-    want = mh(withdup, False)
-    assert mh(withdup, True) == want  # literal expansion path (default)
-    release_shared_caches(spark)  # memo must not leak across gates
-    monkeypatch.setattr(D, "_DUP_LITERAL_LIMIT", 0)
-    assert mh(withdup, True) == want  # broadcast expansion path
     release_shared_caches(spark)
-    monkeypatch.setattr(D, "_DUP_BROADCAST_LIMIT", 0)
-    assert mh(withdup, True) == want  # forced shuffle expansion path
+    want = mh(withdup, False)
+    assert mh(withdup, True) == want  # cold
+    assert mh(withdup, True) == want  # warm: groups relation still cached
     release_shared_caches(spark)
 
 
 def test_dup_memo_distinguishes_same_schema_corpora(spark):
     """Two in-memory corpora with IDENTICAL schemas canonicalize to the
-    same plan string (LocalRelation's string hides its rows), so the
-    dup-info memo must validate against the CacheManager ENTRY — which
-    is data-aware — not the plan string alone (regression: the second
-    corpus reused the first's dup structure and emitted its pairs)."""
+    same plan string (LocalRelation's string hides its rows). With the
+    first corpus's groups relation still cached, the second must get its
+    OWN pairs: the cache lookup is data-aware (regression: a memo keyed
+    on the plan string once served the first corpus's dup structure to
+    the second)."""
     from local_pubchem_db_spark.operators import dedup as D
     from local_pubchem_db_spark.operators.util import (
         release_shared_caches,
@@ -475,6 +484,7 @@ def test_minhash_pairs_equal_pre_r14_two_stage_plan(spark, sf_dir):
     primitives."""
     from pyspark.sql import functions as F
 
+    from local_pubchem_db_spark.functions.text import shingle_array_udf
     from local_pubchem_db_spark.operators import dedup as D
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
@@ -521,134 +531,20 @@ def test_minhash_pairs_equal_pre_r14_two_stage_plan(spark, sf_dir):
     assert got, "fixture lost its near-dups"
     # with collapse on: reconstruct the FULL pre-r14 pipeline (two-stage
     # rep pairs + the same expansion with the old shingle-derived
-    # valid_gids) and require exact equality
+    # validity: the rep text has >= 1 shingle) and require exact equality
     want = sorted(
         (r["id1"], r["id2"], r["jaccard"])
-        for r in D._expand_collapsed(
+        for r in D._expand_rep_pairs(
             groups,
             rep_pairs,
             val_col="jaccard",
-            intra_column=F.lit(1.0),
-            intra_value=1.0,
-            valid_gids=shingled.select(F.col("id").alias("gid")),
+            intra_val=F.lit(1.0),
+            valid=F.size(shingle_array_udf(3)(F.col("text"))) > 0,
             cap=64,
         ).collect()
     )
     assert got == want
     assert want_reps  # two-stage found pairs too
-
-
-def _initial_plan(df):
-    """Pre-execution physical plan string. Under AQE this is the
-    AdaptiveSparkPlan's INITIAL plan, which reflects explicit broadcast
-    hints (a hinted join plans BroadcastHashJoin statically; an unhinted
-    one plans a shuffle join that AQE may only later convert) — exactly
-    the property the gate controls."""
-    return df._jdf.queryExecution().executedPlan().toString()
-
-
-def test_lsh_verify_broadcast_gate_plan_shape(spark, monkeypatch):
-    """r15 (VERDICT r14 What's-wrong #1): the two text-fetch joins in
-    _lsh_verified_pairs must broadcast-hint ONLY below the measured-size
-    gates, and the text gate must be measured only for a caller-vouched
-    cached relation (the mean-octets aggregate reads the corpus text
-    column — an uncached rel takes the shuffle verify instead of paying
-    a fourth cold scan; r15 review finding). autoBroadcastJoinThreshold
-    is disabled for the assertion so the ONLY possible source of a
-    static BroadcastHashJoin is the explicit hint — isolating the gate
-    from Spark's own stats-based broadcast selection on a tiny test
-    corpus."""
-    from local_pubchem_db_spark.operators import dedup as D
-    from local_pubchem_db_spark.operators.util import release_shared_caches
-
-    long_a = " ".join(f"alpha{i} beta gamma delta" for i in range(40))
-    docs = spark.createDataFrame(
-        [(i, long_a + f" tail{i}") for i in range(8)],
-        "doc_id long, text string",
-    )
-    rel = docs.select(F.col("doc_id").alias("id"), "text")
-    old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        def plan(limits=None, *, cached):
-            release_shared_caches(spark)
-            for name, val in (limits or {}).items():
-                monkeypatch.setattr(D, name, val)
-            if cached:
-                df = D._lsh_verified_pairs(
-                    rel, 3, 128, 32, 64, 0.8, rel_cached=True
-                )
-            else:
-                df = D.minhash_lsh_dedup_pairs(
-                    docs, "doc_id", "text", threshold=0.8,
-                    collapse_exact=False,
-                )
-            return _initial_plan(df)
-
-        # Below the driver-tier gates (r15): NO joins at all — the
-        # verify runs over an Arrow-local relation of collected pairs.
-        p = plan(cached=True)
-        assert "Join" not in p and "BroadcastExchange" not in p
-        assert "LocalTableScan" in p
-
-        # Driver tier disabled: cached rel, below both broadcast gates
-        # — both text-fetch joins broadcast-hinted.
-        monkeypatch.setattr(D, "_LSH_DRIVER_VERIFY_PAIRS", 0)
-        assert plan(cached=True).count("BroadcastHashJoin") == 2
-
-        # Cached rel, text payload above its ceiling: the id-only cand
-        # still broadcasts, the text-carrying half does NOT.
-        p = plan({"_LSH_TEXT_BROADCAST_BYTES": 0}, cached=True)
-        assert p.count("BroadcastHashJoin") == 1
-        monkeypatch.setattr(D, "_LSH_TEXT_BROADCAST_BYTES", 64 << 20)
-
-        # Uncached rel (the no-collapse path): the text gate is never
-        # measured — cand broadcasts under the pair gate, half does not.
-        assert plan(cached=False).count("BroadcastHashJoin") == 1
-
-        # Pair count above the limit: NO broadcast hint anywhere — the
-        # pre-r14 shuffle-join verify shape — on either path.
-        p = plan({"_LSH_PAIR_BROADCAST_LIMIT": 0}, cached=False)
-        assert "BroadcastHashJoin" not in p
-        p = plan(cached=True)
-        assert "BroadcastHashJoin" not in p
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
-        release_shared_caches(spark)
-
-
-def test_lsh_verify_gate_results_identical_across_shapes(spark, monkeypatch):
-    """All four gate outcomes (driver-literal tier / both broadcasts /
-    cand-only / none) must emit the identical verified pair relation —
-    the gate is plan-shape only, never semantics."""
-    from local_pubchem_db_spark.operators import dedup as D
-    from local_pubchem_db_spark.operators.util import release_shared_caches
-
-    long_a = " ".join(f"alpha{i} beta gamma delta" for i in range(40))
-    docs = spark.createDataFrame(
-        [(i, long_a + f" tail{i}") for i in range(8)]
-        + [(100 + i, long_a + " tail0") for i in range(3)],
-        "doc_id long, text string",
-    )
-
-    def rows():
-        release_shared_caches(spark)
-        return sorted(
-            (r["id1"], r["id2"], round(r["jaccard"], 12))
-            for r in D.minhash_lsh_dedup_pairs(
-                docs, "doc_id", "text", threshold=0.8, collapse_exact=True
-            ).collect()
-        )
-
-    want = rows()  # collapse path, tiny pairs: the driver-literal tier
-    assert want, "fixture lost its near-dups"
-    monkeypatch.setattr(D, "_LSH_DRIVER_VERIFY_PAIRS", 0)
-    assert rows() == want  # both text-fetch joins broadcast-hinted
-    monkeypatch.setattr(D, "_LSH_TEXT_BROADCAST_BYTES", 0)
-    assert rows() == want  # cand-only broadcast
-    monkeypatch.setattr(D, "_LSH_PAIR_BROADCAST_LIMIT", 0)
-    assert rows() == want  # plain shuffle joins
-    release_shared_caches(spark)
 
 
 
@@ -718,134 +614,131 @@ def test_bounded_bucket_pairs_properties(spark, buckets):
     assert len(got) <= bound
 
 
-def test_dup_info_one_probe_job_and_warm_memo(spark):
-    """r15 job-fold: _dup_info computes dup sizing + the text-gate's
-    mean octets in ONE aggregation (plus one conditional literal
-    collect), its mean matches a separate aggregate, the Column-form
-    validity resolves in the same collect as the legacy DataFrame form,
-    and a warm re-invocation with a stable valid_key runs ZERO jobs."""
-    from local_pubchem_db_spark.operators import dedup as D
-    from local_pubchem_db_spark.operators.util import release_shared_caches
+def _degraded_corpora(spark):
+    """(corpus, history index) over the adversarial and flood corpora:
+    the history holds the near-dup ``long_b`` text and the flood text, so
+    the incremental path drops a whole exact group through its expansion
+    join."""
+    from local_pubchem_db_spark.operators.dedup import lsh_bucket_index
 
-    release_shared_caches(spark)
-    docs = spark.createDataFrame(
-        [(1, "aa bb cc dd"), (2, "aa bb cc dd"), (3, "x"), (4, "x"),
-         (5, "solo doc here now")],
+    rows = _adversarial_rows() + _flood_rows(offset=10000)
+    corpus = spark.createDataFrame(rows, "doc_id long, text string")
+    texts = dict(rows)
+    history = spark.createDataFrame(
+        [(90000, texts[200]), (90001, texts[10000])],
         "doc_id long, text string",
     )
-    groups = D._exact_groups(docs, "doc_id", "text")
-    pred = D._word_count(F.col("text")) >= 3
-    info = D._dup_info(groups, pred, 64, valid_key="wc>=3")
-    assert (info.n_dup, info.dup_members) == (2, 4)
-    want_mean = groups.agg(F.avg(F.octet_length("text"))).first()[0]
-    assert abs(info.mean_octets - float(want_mean)) < 1e-9
-    # Column-form validity == legacy DataFrame-form validity: the "x"
-    # group (too short) must emit no intra pairs on either path
-    legacy = D._dup_info(
-        groups,
-        groups.filter(pred).select("gid"),
-        64,
+    return corpus, lsh_bucket_index(history, "doc_id", "text")
+
+
+def _dedup_outputs(spark):
+    """{name: (DataFrame, sorted rows)} for the three LSH-family
+    operators over ``_degraded_corpora``."""
+    from local_pubchem_db_spark.operators.dedup import (
+        incremental_minhash_new_ids,
+        simhash_dedup_pairs,
     )
-    assert legacy.literal == info.literal
-    assert info.literal is not None
-    assert all(
-        a != 3 and b != 3 for a, b in info.literal["intra"]
-    ), "too-short dup group must be invalid for intra pairs"
-    # warm memo: the identical (groups, valid_key, cap) re-probe runs
-    # zero jobs even though the predicate Column is a NEW object with
-    # fresh lambda-variable ids
-    st = spark.sparkContext.statusTracker()
-    before = len(st.getJobIdsForGroup(None) or [])
-    again = D._dup_info(
-        groups,
-        D._word_count(F.col("text")) >= 3,
-        64,
-        valid_key="wc>=3",
-    )
-    after = len(st.getJobIdsForGroup(None) or [])
-    assert again == info
-    assert after == before, "warm _dup_info re-probe must run no jobs"
-    release_shared_caches(spark)
+
+    corpus, idx = _degraded_corpora(spark)
+    frames = {
+        "minhash": minhash_lsh_dedup_pairs(corpus, "doc_id", "text"),
+        "minhash_direct": minhash_lsh_dedup_pairs(
+            corpus, "doc_id", "text", collapse_exact=False
+        ),
+        # uncapped, the flood's 1000-way group would emit C(1000, 2)
+        # intra pairs; capped, every expansion join still runs
+        "simhash": simhash_dedup_pairs(
+            corpus, "doc_id", "text", max_bucket_size=64
+        ),
+        "incremental": incremental_minhash_new_ids(
+            corpus, idx, "doc_id", "text", max_bucket_size=64
+        ),
+    }
+    return {
+        k: (df, sorted(tuple(r) for r in df.collect()))
+        for k, df in frames.items()
+    }
 
 
-def test_dup_probe_overlap_threaded_literal_collect(spark, monkeypatch):
-    """r16 (guide §2.6, VERDICT r15 Next #3): the literal-dup collect of
-    the LSH probe rides a driver-side thread overlapping the candidate
-    count. Pins, in order of importance:
-
-    - EQUALITY: the overlapped pair relation is identical to the
-      sequential form's (the thread only moves WHEN the collect runs);
-    - FILL RACE: by the time the background collect starts, the probe
-      aggregation has fully materialized the groups cache, so the
-      thread and the candidate jobs both read the InMemoryRelation and
-      the multi-subtree first-reference race ``shared()`` documents
-      cannot occur;
-    - MEMO SAFETY: the session memo holds no entry for the in-flight
-      probe while the background collect runs — it is written only by
-      the calling thread inside ``resolve()``.
-    """
-    import threading
-
-    from local_pubchem_db_spark.operators import dedup as D
+def test_lsh_family_equal_with_broadcast_disabled(spark):
+    """Every join in the LSH family is left to AQE, so a session that
+    cannot broadcast at all must still emit identical rows through the
+    shuffle joins: MinHash (collapse on and off), SimHash and the
+    incremental path, over the adversarial and flood corpora."""
     from local_pubchem_db_spark.operators.util import release_shared_caches
 
-    docs = spark.createDataFrame(
-        [(i, f"alpha beta gamma delta epsilon zeta {i % 7} common tail")
-         for i in range(40)]
-        + [(100 + i, "alpha beta gamma delta epsilon zeta 0 common tail")
-           for i in range(6)],
-        "doc_id long, text string",
+    keys = (
+        "spark.sql.autoBroadcastJoinThreshold",
+        "spark.sql.adaptive.autoBroadcastJoinThreshold",
     )
-
     release_shared_caches(spark)
-    seen: dict = {}
-    orig_collect = D._collect_literal_dups
+    want = {k: rows for k, (_, rows) in _dedup_outputs(spark).items()}
+    assert want["minhash"] == want["minhash_direct"]
+    assert want["minhash"] and want["simhash"] and want["incremental"]
+    old = {k: spark.conf.get(k, None) for k in keys}
+    try:
+        for k in keys:
+            spark.conf.set(k, "-1")
+        release_shared_caches(spark)
+        got = _dedup_outputs(spark)
+    finally:
+        for k, v in old.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
+        release_shared_caches(spark)
+    for name, (df, rows) in got.items():
+        assert rows == want[name], name
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        assert "SortMergeJoin" in plan, (name, plan)
+        assert "BroadcastHashJoin" not in plan, (name, plan)
 
-    def spy_collect(groups, valid, cap):
-        seen["thread"] = threading.current_thread()
-        seen["memo_len"] = len(D._DUP_MEMO.get(spark, {}) or {})
-        infos = spark.sparkContext._jsc.sc().getRDDStorageInfo()
-        seen["fully_cached"] = any(
-            i.numCachedPartitions() == i.numPartitions()
-            and i.numPartitions() > 0
-            for i in infos
-        )
-        return orig_collect(groups, valid, cap)
 
-    monkeypatch.setattr(D, "_collect_literal_dups", spy_collect)
-    overlapped = sorted(
-        (r["id1"], r["id2"], round(r["jaccard"], 9))
-        for r in D.minhash_lsh_dedup_pairs(
-            docs, "doc_id", "text"
-        ).collect()
+def test_lsh_family_plans_carry_no_broadcast_hint(spark):
+    """No user BROADCAST hint in the analyzed plans of the three LSH
+    operators: every broadcast is AQE's runtime choice, which it can
+    also take back."""
+    from local_pubchem_db_spark.operators.dedup import (
+        incremental_minhash_new_ids,
+        simhash_dedup_pairs,
     )
-    assert seen, "literal collect never ran — fixture lost its dup set"
-    assert seen["thread"] is not threading.main_thread(), (
-        "literal collect must run on the overlap thread"
-    )
-    assert seen["fully_cached"], (
-        "groups cache must be fully materialized before the background "
-        "collect starts (the fill-race pin)"
-    )
-    assert seen["memo_len"] == 0, (
-        "session memo must not be written while the probe is in flight"
-    )
-    assert D._DUP_MEMO.get(spark), "resolve() must memoize the DupInfo"
+    from local_pubchem_db_spark.operators.util import release_shared_caches
 
-    # sequential control: same corpus, overlap forced off
-    monkeypatch.setattr(D, "_collect_literal_dups", orig_collect)
-    orig_start = D._dup_info_start
-
-    def no_overlap(groups, valid, cap, valid_key=None, overlap=False):
-        return orig_start(groups, valid, cap, valid_key=valid_key)
-
-    monkeypatch.setattr(D, "_dup_info_start", no_overlap)
+    corpus, idx = _degraded_corpora(spark)
+    for df in (
+        minhash_lsh_dedup_pairs(corpus, "doc_id", "text"),
+        minhash_lsh_dedup_pairs(corpus, "doc_id", "text", collapse_exact=False),
+        simhash_dedup_pairs(corpus, "doc_id", "text"),
+        incremental_minhash_new_ids(corpus, idx, "doc_id", "text"),
+    ):
+        analyzed = df._jdf.queryExecution().analyzed().toString()
+        assert "ResolvedHint" not in analyzed, analyzed
     release_shared_caches(spark)
-    sequential = sorted(
-        (r["id1"], r["id2"], round(r["jaccard"], 9))
-        for r in D.minhash_lsh_dedup_pairs(
-            docs, "doc_id", "text"
-        ).collect()
+
+
+def test_minhash_cold_construction_jobs(spark, sf_dir):
+    """A cold minhash_lsh_dedup_pairs call on the sf0.01 documents table
+    runs at most 5 Spark jobs before it returns its DataFrame: no count,
+    probe or collect chooses the plan's shape."""
+    import os
+
+    import pytest
+
+    from local_pubchem_db_spark.operators.util import release_shared_caches
+
+    from tests.test_pipeline import run_in_job_group
+
+    sf01 = os.path.join(os.path.dirname(sf_dir), "sf0.01")
+    if not os.path.isdir(sf01):
+        pytest.skip("sf0.01 tables not present")
+    release_shared_caches(spark)
+    docs = spark.read.parquet(f"{sf01}/documents.parquet")
+    df, jobs = run_in_job_group(
+        spark,
+        "minhash_construct",
+        lambda: minhash_lsh_dedup_pairs(docs, "doc_id", "text"),
     )
-    assert overlapped == sequential
+    assert jobs <= 5, jobs
+    assert df.limit(1).count() == 1  # sf0.01 has near-dups
     release_shared_caches(spark)
