@@ -8,43 +8,44 @@ Lifecycle parity:
   transform/NOT-NULL skip      → one declarative select + na.drop
                                                        (utils.py:59-155)
   INSERT INTO compounds        → parquet append        (utils.py:136-159)
-  manifest row per file        → manifest append       (utils.py:327-332)
-  deferred CREATE INDEX        → sorted covering
-                                 projections, rebuilt
-                                 only when compounds
-                                 changed               (utils.py:334-341)
+  manifest row per file        → manifest append, rows
+                                 built on the driver   (utils.py:327-332)
+  deferred CREATE INDEX        → one sorted run per
+                                 ingested file         (utils.py:334-341)
   error taxonomy → exit code   → build_db return code  (utils.py:343-365)
 
 Scale design notes:
 - ALL pending files are processed in ONE Spark job (the reference loops
   file-by-file in Python). Parallelism is per-file for .gz and per-split
-  for plain text; the manifest is computed from the same DataFrame with a
-  map-side-combinable count per source file.
+  for plain text. The manifest needs no second pass over the data: each
+  file's ``n_compounds`` is the sum of the parquet footer row counts of
+  the partition just written for it, read on the driver.
 - The NOT-NULL filter runs before the sink (filter-before-sink,
   utils.py:140-155) and Catalyst pushes it toward the scan.
 - Secondary indexes (WITH_INDEX) have no SQLite analog in Spark; the
-  equivalent physical designs, all built-in: the main table is written
-  range-partitioned + sorted by the primary key (parquet min/max row-group
-  stats → point/range lookups prune), and each indexed column gets a
-  sorted covering projection ``idx_<col>`` (col + pk) — the columnar
-  analog of CREATE INDEX (utils.py:334-341), enabling stats-pruned
-  lookups on that column at a small storage cost.
-- Deferred CREATE INDEX is incremental: the projections are rebuilt only
-  when the compounds table's data files changed. ``build_indexes`` keeps
-  a stamp (``db/_idx_stamp.json``: indexed columns, primary key and a
-  digest of the sorted compounds file names) next to the projections.
-  Every write creates new part-file names, so an append, a crash-retry
-  overwrite and a reset all change it. A call whose stamp matches, with
-  every ``idx_<col>/_SUCCESS`` present, launches no Spark job. A rebuild
-  deletes the stamp first and writes it last, so a crash anywhere in
-  between forces a rebuild on the next call. The per-column projections
-  of a rebuild are written concurrently from one cached scan.
+  columnar analog of CREATE INDEX (utils.py:334-341) is a sorted covering
+  projection ``idx_<col>`` (col + pk) per indexed column, whose parquet
+  min/max row-group stats let lookups on that column prune.
+- The index is maintained per file, so an append costs O(new file), like
+  the reference's SQLite indexes: ``idx_<col>`` is partitioned like the
+  compounds table, and each ``ingest_batch=<file>`` partition is that
+  file's run, sorted by the column. After the compounds write, ``build_db``
+  reads the batch's partitions back and writes their runs, with the same
+  dynamic partition overwrite; earlier runs are never rewritten.
+  ``build_indexes`` rebuilds every run only when the stamp
+  (``db/_idx_stamp.json``: indexed columns and primary key) no longer
+  matches the layout, after ``reset``, and once on a DB whose indexes
+  predate the run layout. Otherwise it writes runs only for the
+  partitions that lack a current one (streaming ingest writes none), and
+  with nothing to write it launches no Spark job. Compacting runs waits
+  for a lookup that reads them.
 - Exactly-once: batch mode writes each file's rows into an
-  ``ingest_batch=<file>`` partition under dynamic partition overwrite and
-  commits the manifest LAST. A crash between the two writes leaves orphan
-  partitions with no manifest row; the retry re-selects exactly those
-  files and OVERWRITES their partitions instead of appending duplicates —
-  the no-duplicates guarantee of the reference's per-file transaction
+  ``ingest_batch=<file>`` partition under dynamic partition overwrite,
+  then the file's index runs the same way, and commits the manifest
+  LAST. A crash before the commit leaves partitions and runs with no
+  manifest row; the retry re-selects exactly those files and OVERWRITES
+  their partitions and runs instead of appending duplicates — the
+  no-duplicates guarantee of the reference's per-file transaction
   (utils.py:322-332) without a transactional store.
   ``local_pubchem_db_spark.streaming.ingest`` adds checkpointed file
   tracking on the same sink contract.
@@ -54,7 +55,6 @@ from __future__ import annotations
 
 import contextlib
 import glob as _glob
-import hashlib
 import json
 import os
 import shutil
@@ -63,9 +63,10 @@ from concurrent.futures import ThreadPoolExecutor
 from timeit import default_timer as _timer
 from typing import Any, Optional
 
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import StructField, StructType
+from pyspark.sql.types import StringType, StructField, StructType
 from pyspark.util import inheritable_thread_target
 
 from local_pubchem_db_spark.operators.util import driver_rows_df
@@ -76,7 +77,7 @@ from local_pubchem_db_spark.plans.layout import (
 )
 from local_pubchem_db_spark.sources.manifest import (
     MANIFEST_SCHEMA,
-    manifest_rows_for,
+    manifest_row,
     pending_files,
     read_manifest,
 )
@@ -100,10 +101,12 @@ def compounds_plan(sdf: DataFrame, layout: CompiledLayout) -> DataFrame:
 class PubChemDB:
     """Query layer over a built database directory.
 
-    Directory layout: ``<base>/db/compounds`` (parquet),
+    Directory layout: ``<base>/db/compounds`` (parquet, one
+    ``ingest_batch=<file>`` partition per ingested file),
     ``<base>/db/sdf_file`` (parquet manifest), ``<base>/db/idx_<col>``
-    (sorted covering projections for WITH_INDEX columns) and
-    ``<base>/db/_idx_stamp.json`` (what those were built from).
+    (sorted covering projections for WITH_INDEX columns, one run per
+    compounds partition) and ``<base>/db/_idx_stamp.json`` (the indexed
+    columns and primary key the runs were built for).
     """
 
     def __init__(self, spark: SparkSession, base_dir: str):
@@ -111,7 +114,7 @@ class PubChemDB:
         self.db_dir = os.path.join(base_dir, "db")
         self.compounds_path = os.path.join(self.db_dir, "compounds")
         self.manifest_path = os.path.join(self.db_dir, "sdf_file")
-        # what the idx_* projections were built from (build_indexes)
+        # what the idx_* runs were built for (build_indexes)
         self.index_stamp_path = os.path.join(self.db_dir, "_idx_stamp.json")
 
     # -- tables ---------------------------------------------------------
@@ -184,9 +187,7 @@ def build_db(
             for path in (db.compounds_path, db.manifest_path):
                 if os.path.exists(path):
                     shutil.rmtree(path)
-            for idx in _glob.glob(os.path.join(db.db_dir, "idx_*")):
-                shutil.rmtree(idx)
-            _remove_stamp(db)
+            _drop_indexes(db)
         os.makedirs(db.db_dir, exist_ok=True)
 
         pattern = "*.sdf.gz" if use_gzip else "*.sdf"
@@ -197,51 +198,53 @@ def build_db(
 
         if sdf_files:
             start = _timer()
-            parsed = read_sdf(spark, sdf_files)
-            rows = compounds_plan(parsed, layout)
-            # Cache the batch so compounds write + manifest rows share one
-            # materialization (two actions over the same plan).
-            rows.persist()
-            try:
-                # Idempotent retry (the batch twin of streaming/ingest.py):
-                # per-source-file partitions + dynamic overwrite + manifest
-                # last. See the module docstring's exactly-once note.
-                (
-                    rows.withColumn("ingest_batch", F.col("source_file"))
-                    .drop("source_file")
-                    .write.mode("overwrite")
-                    .option("partitionOverwriteMode", "dynamic")
-                    .partitionBy("ingest_batch")
-                    .parquet(db.compounds_path)
+            rows = compounds_plan(read_sdf(spark, sdf_files), layout)
+            # Idempotent retry (the batch twin of streaming/ingest.py):
+            # per-source-file partitions + dynamic overwrite + manifest
+            # last. See the module docstring's exactly-once note.
+            (
+                rows.withColumn("ingest_batch", F.col("source_file"))
+                .drop("source_file")
+                .write.mode("overwrite")
+                .option("partitionOverwriteMode", "dynamic")
+                .partitionBy("ingest_batch")
+                .parquet(db.compounds_path)
+            )
+            # Each file's row count is the footer total of its partition;
+            # a file whose every row failed NOT NULL wrote no partition.
+            names = [os.path.basename(f) for f in sdf_files]
+            parts = {n: _partition_dir(spark, n) for n in names}
+            counts = {
+                n: sum(
+                    pq.read_metadata(e.path).num_rows
+                    for e in _data_files(os.path.join(db.compounds_path, parts[n]))
                 )
-                # One collect of the batch's manifest rows (one per file)
-                # feeds both the manifest commit and the A17 progress lines
-                # (utils.py:319,324,134,162-163). The commit still comes
-                # after the compounds write. Files ingest concurrently in
-                # ONE job here (the reference loops them serially), so the
-                # wall time below is per batch, not per file.
-                logged = (
-                    manifest_rows_for(rows.select("source_file"), sdf_files)
-                    .orderBy("filename")
-                    .collect()
-                )
-                (
-                    driver_rows_df(spark, logged, MANIFEST_SCHEMA)
-                    .coalesce(1)
-                    .write.mode("append")
-                    .parquet(db.manifest_path)
-                )
-                for ii, r in enumerate(logged):
-                    print(
-                        "Processed sdf-file: %s (%d/%d): %d compounds"
-                        % (r["filename"], ii + 1, len(logged), r["n_compounds"])
-                    )
+                for n in names
+            }
+            if layout.indexed_cols:
+                _drop_stale_indexes(db, layout)
+                _write_runs(spark, db, layout, [parts[n] for n in names if counts[n]])
+            # The manifest rows (one per file) feed both the commit, which
+            # comes after the data and index writes, and the A17 progress
+            # lines (utils.py:319,324,134,162-163). Files ingest
+            # concurrently in ONE job here (the reference loops them
+            # serially), so the wall time below is per batch, not per file.
+            logged = [manifest_row(n, counts[n]) for n in names]
+            (
+                driver_rows_df(spark, logged, MANIFEST_SCHEMA)
+                .coalesce(1)
+                .write.mode("append")
+                .parquet(db.manifest_path)
+            )
+            for ii, r in enumerate(logged):
                 print(
-                    "Extraction and insertion of the information took %.3fsec"
-                    % (_timer() - start)
+                    "Processed sdf-file: %s (%d/%d): %d compounds"
+                    % (r[0], ii + 1, len(logged), r[-1])
                 )
-            finally:
-                rows.unpersist()
+            print(
+                "Extraction and insertion of the information took %.3fsec"
+                % (_timer() - start)
+            )
 
         build_indexes(spark, db, layout)
         return 0
@@ -254,91 +257,150 @@ def build_db(
 def build_indexes(spark: SparkSession, db: PubChemDB, layout: CompiledLayout) -> None:
     """Deferred 'index' build after bulk load (utils.py:334-341).
 
-    For each WITH_INDEX column, write a covering projection (indexed col +
-    primary key) range-partitioned and sorted by the indexed column —
-    parquet min/max stats then prune point/range lookups to a handful of
-    row groups, the columnar analog of a B-tree index. Built after the full
-    load, like the reference's deferred CREATE INDEX bulk-load pattern.
+    For each WITH_INDEX column, ``idx_<col>`` holds one run per compounds
+    partition: ``idx_<col>/ingest_batch=<file>``, the (indexed col +
+    primary key) projection of that partition, each file sorted by the
+    indexed column — parquet min/max stats then prune point/range lookups
+    to a handful of row groups, the columnar analog of a B-tree index.
 
-    Rebuilt only when the compounds files change: if the stored stamp
-    (see ``_index_stamp``) matches and every ``idx_<col>/_SUCCESS`` exists,
-    this returns without launching a Spark job. Otherwise it deletes the
-    stamp, rebuilds every projection and writes the stamp last, so a crash
-    in between leaves no stamp and the next call rebuilds. A rebuild
-    caches the (indexed cols + pk) projection once and writes the
-    per-column projections concurrently, one driver thread per column.
+    ``build_db`` writes the runs of each batch it ingests, so this call
+    only repairs: it writes runs for the compounds partitions that have
+    none in some ``idx_<col>``, or whose run is older than the
+    partition's data files (streaming ingest writes no runs, and a
+    replayed streaming batch rewrites its partition). Every ``idx_*`` is
+    dropped and rebuilt first when the stamp (``_idx_stamp.json``) names
+    other indexed columns or another primary key, after ``reset``, and
+    once on a DB whose indexes predate the run layout. When nothing needs
+    a run, no Spark job runs.
     """
     if not layout.indexed_cols or not os.path.exists(db.compounds_path):
         return
-    stamp = _index_stamp(db, layout)
-    if _read_stamp(db) == stamp and all(
-        os.path.exists(os.path.join(db.db_dir, f"idx_{c}", "_SUCCESS"))
-        for c in layout.indexed_cols
-    ):
+    _drop_stale_indexes(db, layout)
+    _write_runs(spark, db, layout, _partitions_without_runs(db, layout))
+
+
+def _write_runs(
+    spark: SparkSession, db: PubChemDB, layout: CompiledLayout, parts: list[str]
+) -> None:
+    """Write every WITH_INDEX column's run for the given compounds
+    partitions (``ingest_batch=...`` directory names), with the dynamic
+    partition overwrite the compounds table uses, so a retried run
+    replaces its partition. The partitions are read back from disk
+    through the layout's schema (no inference job); the per-column writes
+    are independent and run as concurrent jobs, one driver thread each."""
+    if not parts:
         return
-    _remove_stamp(db)
     pk = layout.primary_key
-    # one cached scan feeds every index projection instead of re-reading
-    # the table once per WITH_INDEX column; the layout gives the schema, so
-    # the read launches no footer-inference job
     needed = sorted(set(layout.indexed_cols) | ({pk} - {None}))
     schema = StructType(
         [StructField(c, layout.columns[c].spark_type) for c in needed]
+        + [StructField("ingest_batch", StringType())]
     )
-    compounds = (
-        spark.read.schema(schema).parquet(db.compounds_path)
-        .select(*needed)
-        .persist()
+    # One task per partition: the scan would give each small part file a
+    # task of its own, and a task per file costs more than the sort.
+    batch = (
+        spark.read.schema(schema)
+        .option("basePath", db.compounds_path)
+        .parquet(*[os.path.join(db.compounds_path, p) for p in parts])
+        .coalesce(len(parts))
     )
 
-    def write_index(colname: str) -> None:
-        idx_path = os.path.join(db.db_dir, f"idx_{colname}")
-        if os.path.exists(idx_path):
-            shutil.rmtree(idx_path)
+    def write_run(colname: str) -> None:
         cols = [colname] if pk in (None, colname) else [colname, pk]
         (
-            compounds.select(*cols)
-            .repartitionByRange(F.col(colname))
-            .sortWithinPartitions(colname)
+            batch.select(*cols, "ingest_batch")
+            # sorted by the partition column first, so the writer adds no
+            # sort of its own and each file stays sorted by the column
+            .sortWithinPartitions("ingest_batch", colname)
             .write.mode("overwrite")
-            .parquet(idx_path)
+            .option("partitionOverwriteMode", "dynamic")
+            .partitionBy("ingest_batch")
+            .parquet(os.path.join(db.db_dir, f"idx_{colname}"))
         )
 
+    # inheritable targets keep the caller's job group
+    with ThreadPoolExecutor(max_workers=len(layout.indexed_cols)) as pool:
+        futures = [
+            pool.submit(inheritable_thread_target(spark)(write_run), c)
+            for c in layout.indexed_cols
+        ]
+        for colname, fut in zip(layout.indexed_cols, futures):
+            fut.result()
+            print("Create index on '%s'." % colname)
+
+
+def _partitions_without_runs(db: PubChemDB, layout: CompiledLayout) -> list[str]:
+    """Compounds partitions whose run is missing from some ``idx_<col>``
+    or older than the partition's newest data file. Driver-side listing
+    and stat calls only."""
+    out = []
+    for part in _partition_dirs(db.compounds_path):
+        files = _data_files(os.path.join(db.compounds_path, part))
+        if not files:
+            continue
+        newest = max(e.stat().st_mtime_ns for e in files)
+        for c in layout.indexed_cols:
+            run = _data_files(os.path.join(db.db_dir, f"idx_{c}", part))
+            if not run or min(e.stat().st_mtime_ns for e in run) < newest:
+                out.append(part)
+                break
+    return out
+
+
+def _partition_dir(spark: SparkSession, value: str) -> str:
+    """The ``ingest_batch=<value>`` directory name Spark writes for a
+    partition value, escaped the way the writer escapes it."""
+    utils = spark._jvm.org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
+    return utils.getPartitionPathString("ingest_batch", value)
+
+
+def _partition_dirs(path: str) -> list[str]:
+    with os.scandir(path) as it:
+        return sorted(
+            e.name for e in it if e.is_dir() and e.name.startswith("ingest_batch=")
+        )
+
+
+def _data_files(path: str) -> list[os.DirEntry]:
+    """The data files directly under ``path`` ([] when it is absent). Names
+    starting with "_" or "." are Spark's metadata (_SUCCESS, _temporary,
+    .crc), not data."""
     try:
-        compounds.count()
-        # the writes share the cache and are independent, so they run as
-        # concurrent jobs; inheritable targets keep the caller's job group
-        with ThreadPoolExecutor(max_workers=len(layout.indexed_cols)) as pool:
-            futures = [
-                pool.submit(inheritable_thread_target(spark)(write_index), c)
-                for c in layout.indexed_cols
+        with os.scandir(path) as it:
+            return [
+                e for e in it if e.is_file() and not e.name.startswith(("_", "."))
             ]
-            for colname, fut in zip(layout.indexed_cols, futures):
-                fut.result()
-                print("Create index on '%s'." % colname)
-    finally:
-        compounds.unpersist()
-    _write_stamp(db, stamp)
+    except FileNotFoundError:
+        return []
 
 
-def _index_stamp(db: PubChemDB, layout: CompiledLayout) -> dict[str, Any]:
-    """What the index projections were built from: the indexed columns,
-    the primary key and a digest of the compounds table's data file names
-    (relative, sorted). Writes never reuse a part-file name, so any change
-    to the table changes the digest. Names starting with "_" or "." are
-    Spark's metadata (_SUCCESS, _temporary, .crc), not data."""
-    files = []
-    for root, dirs, names in os.walk(db.compounds_path):
-        dirs[:] = [d for d in dirs if not d.startswith(("_", "."))]
-        rel = os.path.relpath(root, db.compounds_path)
-        files += [os.path.join(rel, n) for n in names if not n.startswith(("_", "."))]
+def _index_spec(layout: CompiledLayout) -> dict[str, Any]:
+    """What the ``idx_*`` runs are built for; the stamp's content."""
     return {
         "indexed_cols": list(layout.indexed_cols),
         "primary_key": layout.primary_key,
-        "compounds_files_sha256": hashlib.sha256(
-            "\n".join(sorted(files)).encode()
-        ).hexdigest(),
+        "partitioned_by": "ingest_batch",
     }
+
+
+def _drop_stale_indexes(db: PubChemDB, layout: CompiledLayout) -> None:
+    """Drop every ``idx_*`` unless the stamp says it was built for this
+    layout's indexed columns and primary key, as per-partition runs, then
+    stamp the (now empty) index set for this layout; the missing runs are
+    written afterwards. The stamp is removed before the drop, so a crash
+    in between drops again on the next call."""
+    spec = _index_spec(layout)
+    if _read_stamp(db) == spec:
+        return
+    _drop_indexes(db)
+    _write_stamp(db, spec)
+
+
+def _drop_indexes(db: PubChemDB) -> None:
+    with contextlib.suppress(FileNotFoundError):
+        os.remove(db.index_stamp_path)
+    for idx in _glob.glob(os.path.join(db.db_dir, "idx_*")):
+        shutil.rmtree(idx)
 
 
 def _read_stamp(db: PubChemDB) -> Optional[dict[str, Any]]:
@@ -354,8 +416,3 @@ def _write_stamp(db: PubChemDB, stamp: dict[str, Any]) -> None:
     with open(tmp, "w") as fh:
         json.dump(stamp, fh)
     os.replace(tmp, db.index_stamp_path)
-
-
-def _remove_stamp(db: PubChemDB) -> None:
-    with contextlib.suppress(FileNotFoundError):
-        os.remove(db.index_stamp_path)

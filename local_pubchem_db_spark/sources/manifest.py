@@ -4,9 +4,9 @@ One row per fully-ingested file — the bookkeeping that makes builds
 incremental and resumable. The reference keeps it in SQLite and anti-joins
 in Python (utils.py:272-282); here it is a small Parquet table, and the
 anti-join is a set difference on the driver over its ``filename`` column,
-read in one Spark job with the schema given (no inference). At 100 TB the
-manifest stays tiny (one row per input shard), so pruning
-already-ingested files never touches the data side.
+read with pyarrow (no Spark job). At 100 TB the manifest stays tiny (one
+row per input shard), so pruning already-ingested files never touches the
+data side.
 
 Schema parity (utils.py:222-227, 327-332): filename is the basename
 (primary key), lowest_cid / highest_cid are parsed from the filename
@@ -19,9 +19,10 @@ the NOT-NULL skip.
 from __future__ import annotations
 
 import os
+import re
+from datetime import datetime, timezone
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 from pyspark.sql.types import (
     LongType,
     StringType,
@@ -61,59 +62,56 @@ def pending_files(
 
     Reference parity: get_sdf_files_not_in_db (utils.py:272-282) + the
     sorted-order processing guarantee (utils.py:282). The manifest holds
-    one row per shard, so its ``filename`` column is collected in one job
-    (read through ``MANIFEST_SCHEMA``, which skips schema inference) and
-    the difference is taken on the driver; at scale this is the
-    partition-pruning analog — ingested shards are never re-read.
+    one row per shard, so its ``filename`` column is read on the driver
+    with ``pyarrow.dataset`` and the difference is taken there; no Spark
+    job runs. Hive partitioning covers the ``ingest_batch``-partitioned
+    manifest that streaming ingest writes, and entries starting with "_"
+    or "." (``_SUCCESS``, a crashed write's ``_temporary/``, checksums)
+    are not data. At scale this is the partition-pruning analog —
+    ingested shards are never re-read. ``spark`` is unused; the signature
+    matches the other manifest readers.
     """
+    import pyarrow.dataset as pads
+
     if not candidate_files:
         return []
-    if not _exists(manifest_path):
-        # fresh build / post-reset: nothing is ingested yet — skip the
-        # read entirely (it would cost the session's first job, ~4 s cold)
-        return sorted(candidate_files)
-    ingested = {
-        r["filename"]
-        for r in spark.read.schema(MANIFEST_SCHEMA)
-        .parquet(manifest_path)
-        .select("filename")
-        .collect()
-    }
+    ingested: set[str] = set()
+    if _exists(manifest_path):
+        manifest = pads.dataset(
+            manifest_path,
+            format="parquet",
+            partitioning="hive",
+            ignore_prefixes=["_", "."],
+        )
+        # a manifest directory holding no data file yet (a first write
+        # that crashed) has no columns at all
+        if "filename" in manifest.schema.names:
+            ingested = set(
+                manifest.to_table(columns=["filename"]).column("filename").to_pylist()
+            )
     return sorted(f for f in candidate_files if os.path.basename(f) not in ingested)
 
 
-def manifest_rows_for(
-    compounds_with_file: DataFrame, filenames: list[str]
-) -> DataFrame:
-    """Compute manifest rows from ingested data: one row per source file.
+_DIGITS = re.compile(r"[0-9]{1,18}")
 
-    ``compounds_with_file`` must carry a ``source_file`` basename column.
-    lowest/highest cid come from the *filename* (reference utils.py:330-331
-    parses ``Compound_<low>_<high>.sdf.gz``), n_compounds from the data.
-    Files that produced zero surviving rows still get a manifest row (the
-    reference inserts n_inserted=0 rows too).
+
+def manifest_row(filename: str, n_compounds: int) -> tuple:
+    """One manifest row, built on the driver, in ``MANIFEST_SCHEMA`` order.
+
+    lowest/highest cid come from the *filename* (reference
+    utils.py:330-331 parses ``Compound_<low>_<high>.sdf.gz``; stem = the
+    name up to its first "."); a part that is missing or not a number is
+    NULL. date_added is today's date in UTC. A file that produced zero
+    surviving rows still gets a row (the reference inserts n_inserted=0
+    rows too).
     """
-    spark = compounds_with_file.sparkSession
-    counts = (
-        compounds_with_file.groupBy("source_file")
-        .agg(F.count(F.lit(1)).alias("n_compounds"))
-    )
-    all_files = driver_rows_df(
-        spark,
-        [(os.path.basename(f),) for f in filenames],
-        "source_file string",
-    )
-    stem = F.split(F.col("source_file"), r"\.").getItem(0)
-    return (
-        all_files.join(counts, on="source_file", how="left")
-        .select(
-            F.col("source_file").alias("filename"),
-            F.split(stem, "_").getItem(1).cast(LongType()).alias("lowest_cid"),
-            F.split(stem, "_").getItem(2).cast(LongType()).alias("highest_cid"),
-            F.date_format(F.current_date(), "yyyy-MM-dd").alias("date_added"),
-            F.coalesce(F.col("n_compounds"), F.lit(0)).cast(LongType()).alias("n_compounds"),
-        )
-    )
+    parts = filename.split(".")[0].split("_")
+
+    def cid(i: int):
+        return int(parts[i]) if i < len(parts) and _DIGITS.fullmatch(parts[i]) else None
+
+    today = datetime.now(timezone.utc).strftime("%Y-%m-%d")
+    return (filename, cid(1), cid(2), today, n_compounds)
 
 
 def _exists(path: str) -> bool:

@@ -32,8 +32,9 @@ from typing import Any, Optional
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from local_pubchem_db_spark.operators.util import driver_rows_df
 from local_pubchem_db_spark.plans.layout import compile_layout
-from local_pubchem_db_spark.sources.manifest import manifest_rows_for
+from local_pubchem_db_spark.sources.manifest import MANIFEST_SCHEMA, manifest_row
 from local_pubchem_db_spark.sources.sdf import RECORD_DELIM, parse_sdf_records
 
 
@@ -99,8 +100,15 @@ def stream_build_db(
                 r["source_file"]
                 for r in batch_df.select("source_file").distinct().collect()
             ]
+            counts = {
+                r["source_file"]: r["count"]
+                for r in rows.groupBy("source_file").count().collect()
+            }
+            manifest_rows = [
+                manifest_row(f, counts.get(f, 0)) for f in sorted(batch_files)
+            ]
             (
-                manifest_rows_for(rows.select("source_file"), batch_files)
+                driver_rows_df(spark, manifest_rows, MANIFEST_SCHEMA)
                 .withColumn("ingest_batch", F.lit(batch_id))
                 .write.mode("overwrite")
                 .option("partitionOverwriteMode", "dynamic")

@@ -3,14 +3,18 @@
 Goldens from the reference (unittests_utils.py:207-334): 8 compounds,
 point lookups, NOT_NULL tightening → 5 rows with specific CIDs skipped,
 transform applied end-to-end, incremental manifest behavior. Also pins
-the incremental index build: an up-to-date DB costs no index job, and
-every change to the compounds files rebuilds the projections.
+the per-file index runs: an append writes the runs of its own file only,
+an up-to-date DB costs no Spark job, and only a changed index spec, a
+reset or the pre-run layout rebuilds every run.
 """
 
 import glob
+import gzip
+import json
 import os
 import shutil
 
+import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
@@ -84,28 +88,49 @@ def run_in_job_group(spark, group, fn):
     return out, len(sc.statusTracker().getJobIdsForGroup(group))
 
 
-def index_files(base):
-    """{part file: mtime} over every idx_* projection."""
+def parquet_files(base, *tables):
+    """{part file: mtime} over every parquet file of the given db tables
+    (glob patterns under db/), partition directories included."""
     return {
         f: os.stat(f).st_mtime_ns
-        for f in glob.glob(os.path.join(base, "db", "idx_*", "*.parquet"))
+        for t in tables
+        for f in glob.glob(os.path.join(base, "db", t, "**", "*.parquet"), recursive=True)
     }
 
 
+def index_files(base):
+    """{part file: mtime} over every idx_* run."""
+    return parquet_files(base, "idx_*")
+
+
 def assert_indexes_current(spark, base, cols):
-    """Each idx_<col> holds (col, cid) for exactly the compounds rows, and
-    every part file is sorted by col."""
-    want = PubChemDB(spark, base).compounds()
-    n = want.count()
+    """Each idx_<col> holds (col, cid) for exactly the compounds rows, each
+    run under its compounds partition, and every part file is sorted by
+    col."""
+    compounds = spark.read.parquet(os.path.join(base, "db", "compounds"))
+    n = compounds.count()
     for c in cols:
         path = os.path.join(base, "db", f"idx_{c}")
         idx = spark.read.parquet(path)
-        assert idx.columns == [c, "cid"]
+        assert idx.columns == [c, "cid", "ingest_batch"]
         assert idx.count() == n
-        assert sorted(idx.collect()) == sorted(want.select(c, "cid").collect())
-        for part in glob.glob(os.path.join(path, "*.parquet")):
+        assert sorted(idx.collect()) == sorted(
+            compounds.select(c, "cid", "ingest_batch").collect()
+        )
+        assert not glob.glob(os.path.join(path, "*.parquet"))  # runs only
+        parts = glob.glob(os.path.join(path, "ingest_batch=*", "*.parquet"))
+        assert parts
+        for part in parts:
             values = pq.read_table(part).column(c).to_pylist()
             assert values == sorted(values), part
+
+
+def hold_back(base, tmp_path, name):
+    """Move sdf/<name> out of the base; returns a callable that lands it."""
+    landed = os.path.join(base, "sdf", name)
+    held = str(tmp_path / name)
+    shutil.move(landed, held)
+    return lambda: shutil.move(held, landed)
 
 
 def test_db_import(spark, sdf_dir, tmp_path):
@@ -210,7 +235,7 @@ def test_indexes_built(spark, sdf_dir, tmp_path):
     idx_path = os.path.join(base, "db", "idx_inchikey")
     assert os.path.exists(idx_path)
     idx = spark.read.parquet(idx_path)
-    assert idx.columns == ["inchikey", "cid"]
+    assert idx.columns == ["inchikey", "cid", "ingest_batch"]
     assert idx.count() == 8
 
 
@@ -248,9 +273,8 @@ def test_crash_between_data_and_manifest_does_not_duplicate(
     # partitions with no manifest rows. The retry must re-select those
     # files and OVERWRITE their ingest_batch partitions — never append
     # duplicates (reference utils.py:322-332 rolls the file back; here the
-    # partition is rewritten instead).
-    # The rewritten partitions have new file names, so the retry also
-    # rebuilds the index projections.
+    # partition is rewritten instead). The retry rewrites the index runs
+    # of the files it re-ingests the same way.
     base = make_base(tmp_path, sdf_dir)
     s = indexed_specs("inchikey")
     assert build_db(base, use_gzip=True, reset=True, db_specs=s, spark=spark) == 0
@@ -279,12 +303,12 @@ def test_noop_rerun_skips_index_build(spark, sdf_dir, tmp_path):
     before = index_files(base)
     assert before
 
-    # the whole no-op rerun is the one pending_files job
+    # nothing pending and every run current: no Spark job at all
     rc, jobs = run_in_job_group(
         spark, "noop_build_db",
         lambda: build_db(base, use_gzip=True, reset=False, db_specs=s, spark=spark),
     )
-    assert (rc, jobs) == (0, 1)
+    assert (rc, jobs) == (0, 0)
     db = PubChemDB(spark, base)
     _, jobs = run_in_job_group(
         spark, "noop_build_indexes",
@@ -295,6 +319,115 @@ def test_noop_rerun_skips_index_build(spark, sdf_dir, tmp_path):
     assert_indexes_current(spark, base, ["inchikey", "InChI"])
 
 
+def test_append_touches_only_the_new_file(spark, sdf_dir, tmp_path):
+    base = make_base(tmp_path, sdf_dir)
+    land = hold_back(base, tmp_path, "cmps_06_07.sdf.gz")
+    s = indexed_specs("inchikey", "InChI")
+    assert build_db(base, use_gzip=True, reset=True, db_specs=s, spark=spark) == 0
+    db = PubChemDB(spark, base)
+    assert db.by_cid(46773).count() == 0
+    before = parquet_files(base, "compounds", "idx_*")
+
+    land()
+    rc, jobs = run_in_job_group(
+        spark, "append_build_db",
+        lambda: build_db(base, use_gzip=True, reset=False, db_specs=s, spark=spark),
+    )
+    assert rc == 0
+    # ingest (2), one run write per indexed column, the manifest commit
+    assert jobs <= 8
+    after = parquet_files(base, "compounds", "idx_*")
+    assert before.items() <= after.items()  # no earlier file rewritten
+    new = set(after) - set(before)
+    assert {os.path.basename(os.path.dirname(f)) for f in new} == {
+        "ingest_batch=cmps_06_07.sdf.gz"
+    }
+    assert {f.split(os.sep)[-3] for f in new} == {
+        "compounds", "idx_inchikey", "idx_InChI"
+    }
+    assert_indexes_current(spark, base, ["inchikey", "InChI"])
+    # a lookup after the append sees the new shard
+    assert [r["inchikey"] for r in db.by_cid(46773).collect()] == [
+        "YSQQZRQSZIJQDB-UHFFFAOYSA-N"
+    ]
+
+
+def test_crash_after_runs_before_manifest_is_overwritten(
+    spark, sdf_dir, tmp_path, monkeypatch
+):
+    base = make_base(tmp_path, sdf_dir)
+    land = hold_back(base, tmp_path, "cmps_06_07.sdf.gz")
+    s = indexed_specs("inchikey")
+    assert build_db(base, use_gzip=True, reset=True, db_specs=s, spark=spark) == 0
+    db = PubChemDB(spark, base)
+
+    land()
+    write = DataFrameWriter.parquet
+
+    def crash_on_manifest(self, path, *args, **kwargs):
+        if path == db.manifest_path:
+            raise OSError("injected crash")
+        return write(self, path, *args, **kwargs)
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", crash_on_manifest)
+    assert build_db(base, use_gzip=True, reset=False, db_specs=s, spark=spark) == 1
+    monkeypatch.setattr(DataFrameWriter, "parquet", write)
+    run = os.path.join(db.db_dir, "idx_inchikey", "ingest_batch=cmps_06_07.sdf.gz")
+    crashed = parquet_files(base, "compounds", "idx_*")
+    assert glob.glob(os.path.join(run, "*.parquet"))
+    assert db.sdf_file().count() == 2
+
+    assert build_db(base, use_gzip=True, reset=False, db_specs=s, spark=spark) == 0
+    cids = sorted(r["cid"] for r in db.compounds().select("cid").collect())
+    assert cids == [31038, 31039, 31040, 34516, 34517, 34518, 46773, 46774]
+    assert db.sdf_file().count() == 3
+    after = parquet_files(base, "compounds", "idx_*")
+    rewritten = {f for f in crashed if "cmps_06_07" in f}
+    assert rewritten and rewritten.isdisjoint(after)
+    assert {f: t for f, t in crashed.items() if f not in rewritten}.items() <= after.items()
+    assert_indexes_current(spark, base, ["inchikey"])
+
+
+def test_manifest_counts_from_footers(spark, sdf_dir, tmp_path):
+    # n_compounds sums the footers of the partition written for each file:
+    # a name that Spark escapes in partition paths ("=" -> "%3D") still
+    # gets its rows, and a file whose every row fails NOT NULL writes no
+    # partition and no run but still gets its manifest row with 0
+    base = make_base(tmp_path, sdf_dir)
+    sdf = os.path.join(base, "sdf")
+    os.rename(os.path.join(sdf, "cmps_06_07.sdf.gz"),
+              os.path.join(sdf, "cmps=06_06_07.sdf.gz"))
+    with gzip.open(os.path.join(sdf_dir, "cmps_03_05.sdf.gz"), "rt") as fh:
+        lines = fh.read().split("\n")
+    no_key = [
+        ln for i, ln in enumerate(lines)
+        if ln != "> <PUBCHEM_IUPAC_INCHIKEY>"
+        and (i == 0 or lines[i - 1] != "> <PUBCHEM_IUPAC_INCHIKEY>")
+    ]
+    assert len(lines) - len(no_key) == 6  # three records lose tag + value
+    os.remove(os.path.join(sdf, "cmps_03_05.sdf.gz"))
+    with gzip.open(os.path.join(sdf, "cmps_08_09.sdf.gz"), "wt") as fh:
+        fh.write("\n".join(no_key))
+
+    s = indexed_specs("inchikey")
+    assert build_db(base, use_gzip=True, reset=True, db_specs=s, spark=spark) == 0
+    db = PubChemDB(spark, base)
+    manifest = {r["filename"]: r.asDict() for r in db.sdf_file().collect()}
+    assert {f: r["n_compounds"] for f, r in manifest.items()} == {
+        "cmps_00_02.sdf.gz": 3, "cmps=06_06_07.sdf.gz": 2, "cmps_08_09.sdf.gz": 0,
+    }
+    assert (manifest["cmps=06_06_07.sdf.gz"]["lowest_cid"],
+            manifest["cmps=06_06_07.sdf.gz"]["highest_cid"]) == (6, 7)
+    assert os.path.isdir(
+        os.path.join(db.compounds_path, "ingest_batch=cmps%3D06_06_07.sdf.gz"))
+    assert not glob.glob(os.path.join(db.db_dir, "*", "ingest_batch=cmps_08_09*"))
+    assert db.compounds().count() == 5
+    assert_indexes_current(spark, base, ["inchikey"])
+    # the empty file counts as ingested
+    assert build_db(base, use_gzip=True, reset=False, db_specs=s, spark=spark) == 0
+    assert db.sdf_file().count() == 3
+
+
 def test_stale_indexes_rebuild(spark, sdf_dir, tmp_path, monkeypatch):
     base = make_base(tmp_path, sdf_dir)
     db = PubChemDB(spark, base)
@@ -303,28 +436,38 @@ def test_stale_indexes_rebuild(spark, sdf_dir, tmp_path, monkeypatch):
     stamp = db.index_stamp_path
     assert os.path.exists(stamp)
 
-    # a crash between the manifest commit and the index build leaves no
-    # stamp: the next call rebuilds, with one cache fill and the writes
-    os.remove(stamp)
+    def run_files(part):
+        return {f for f in index_files(base) if f"{os.sep}{part}{os.sep}" in f}
+
+    # a missing run is written again, alone
+    part = "ingest_batch=cmps_03_05.sdf.gz"
+    shutil.rmtree(os.path.join(db.db_dir, "idx_inchikey", part))
     before = index_files(base)
     _, jobs = run_in_job_group(
-        spark, "stale_build_indexes",
+        spark, "missing_run_build_indexes",
         lambda: build_indexes(spark, db, compile_layout(s)),
     )
-    assert jobs > 1
-    assert os.path.exists(stamp)
-    assert set(index_files(base)).isdisjoint(before)
+    assert jobs >= 1
+    after = index_files(base)
+    assert before.items() <= after.items()
+    assert set(after) - set(before) == run_files(part)
     assert_indexes_current(spark, base, ["inchikey"])
 
-    # a projection without its _SUCCESS marker is rebuilt
-    os.remove(os.path.join(db.db_dir, "idx_inchikey", "_SUCCESS"))
+    # a compounds partition rewritten after its run (a replayed streaming
+    # batch): the run is written again, alone
+    part = "ingest_batch=cmps_00_02.sdf.gz"
+    newer = os.stat(db.compounds_path).st_mtime_ns + 10**9
+    for f in glob.glob(os.path.join(db.compounds_path, part, "*.parquet")):
+        os.utime(f, ns=(newer, newer))
     before = index_files(base)
     build_indexes(spark, db, compile_layout(s))
-    assert set(index_files(base)).isdisjoint(before)
+    after = index_files(base)
+    assert run_files(part) and run_files(part).isdisjoint(before)
+    assert {f: t for f, t in before.items() if part not in f}.items() <= after.items()
     assert_indexes_current(spark, base, ["inchikey"])
 
-    # a WITH_INDEX column added without reset; the first attempt crashes
-    # in an index write and leaves no stamp behind
+    # a WITH_INDEX column added without reset rebuilds every run; the
+    # first attempt crashes in a run write and the retry completes it
     s = indexed_specs("inchikey", "InChI")
     write = DataFrameWriter.parquet
 
@@ -333,13 +476,11 @@ def test_stale_indexes_rebuild(spark, sdf_dir, tmp_path, monkeypatch):
             raise OSError("injected crash")
         return write(self, path, *args, **kwargs)
 
+    before = index_files(base)
     monkeypatch.setattr(DataFrameWriter, "parquet", crash_on_index)
     assert build_db(base, use_gzip=True, reset=False, db_specs=s, spark=spark) == 1
-    assert not os.path.exists(stamp)
     monkeypatch.setattr(DataFrameWriter, "parquet", write)
-    before = index_files(base)
     assert build_db(base, use_gzip=True, reset=False, db_specs=s, spark=spark) == 0
-    assert os.path.exists(stamp)
     assert set(index_files(base)).isdisjoint(before)
     assert_indexes_current(spark, base, ["inchikey", "InChI"])
 
@@ -350,7 +491,40 @@ def test_stale_indexes_rebuild(spark, sdf_dir, tmp_path, monkeypatch):
     assert_indexes_current(spark, base, ["inchikey", "InChI"])
 
 
-def test_pending_files_one_job(spark, sdf_dir, tmp_path):
+def test_flat_indexes_migrate_once(spark, sdf_dir, tmp_path):
+    # a DB written before the run layout: one flat sorted projection per
+    # column and a stamp holding a digest of the compounds file names
+    base = make_base(tmp_path, sdf_dir)
+    db = PubChemDB(spark, base)
+    s = indexed_specs("inchikey")
+    assert build_db(base, use_gzip=True, reset=True, db_specs=s, spark=spark) == 0
+    idx = os.path.join(db.db_dir, "idx_inchikey")
+    shutil.rmtree(idx)
+    (
+        db.compounds().select("inchikey", "cid")
+        .repartitionByRange("inchikey").sortWithinPartitions("inchikey")
+        .write.parquet(idx)
+    )
+    with open(db.index_stamp_path, "w") as fh:
+        json.dump({"indexed_cols": ["inchikey"], "primary_key": "cid",
+                   "compounds_files_sha256": "0" * 64}, fh)
+
+    _, jobs = run_in_job_group(
+        spark, "migrate_build_indexes",
+        lambda: build_indexes(spark, db, compile_layout(s)),
+    )
+    assert jobs >= 1
+    assert_indexes_current(spark, base, ["inchikey"])
+    migrated = index_files(base)
+    _, jobs = run_in_job_group(
+        spark, "migrated_build_indexes",
+        lambda: build_indexes(spark, db, compile_layout(s)),
+    )
+    assert jobs == 0
+    assert index_files(base) == migrated
+
+
+def test_pending_files_no_job(spark, sdf_dir, tmp_path):
     base = make_base(tmp_path, sdf_dir)
     assert build_db(base, use_gzip=True, reset=True, db_specs=specs(), spark=spark) == 0
     db = PubChemDB(spark, base)
@@ -361,7 +535,7 @@ def test_pending_files_one_job(spark, sdf_dir, tmp_path):
         spark, "pending_files",
         lambda: pending_files(spark, db.manifest_path, new[::-1] + landed),
     )
-    assert (left, jobs) == (new, 1)
+    assert (left, jobs) == (new, 0)
 
 
 def test_pending_files_partitioned_manifest(spark, tmp_path):
@@ -377,5 +551,16 @@ def test_pending_files_partitioned_manifest(spark, tmp_path):
             .partitionBy("ingest_batch")
             .parquet(manifest)
         )
+    # a crashed write's task output names c_5_6 but was never committed
+    crashed = os.path.join(manifest, "_temporary", "0", "_temporary", "attempt_0")
+    os.makedirs(crashed)
+    pq.write_table(
+        pa.table({"filename": ["c_5_6.sdf.gz"], "n_compounds": [1]}),
+        os.path.join(crashed, "part-00000.parquet"),
+    )
     candidates = ["/x/sdf/c_5_6.sdf.gz", "/x/sdf/b_3_4.sdf.gz", "/x/sdf/a_1_2.sdf.gz"]
-    assert pending_files(spark, manifest, candidates) == ["/x/sdf/c_5_6.sdf.gz"]
+    left, jobs = run_in_job_group(
+        spark, "pending_files_partitioned",
+        lambda: pending_files(spark, manifest, candidates),
+    )
+    assert (left, jobs) == (["/x/sdf/c_5_6.sdf.gz"], 0)
