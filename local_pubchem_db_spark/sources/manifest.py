@@ -8,6 +8,11 @@ read with pyarrow (no Spark job). At 100 TB the manifest stays tiny (one
 row per input shard), so pruning already-ingested files never touches the
 data side.
 
+Rows are committed on the driver too (``write_manifest``): pyarrow writes
+them as one parquet file under a dot-prefixed name, which Spark and
+pyarrow readers skip, and one ``os.replace`` makes it visible
+(``commit_parquet``, which ``pipeline`` also uses for its index runs).
+
 Schema parity (utils.py:222-227, 327-332): filename is the basename
 (primary key), lowest_cid / highest_cid are parsed from the filename
 pattern ``<stem>_<low>_<high>.<ext>`` (the reference inserts the split
@@ -20,9 +25,14 @@ from __future__ import annotations
 
 import os
 import re
+import uuid
 from datetime import datetime, timezone
+from typing import Optional
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import (
     LongType,
     StringType,
@@ -41,6 +51,7 @@ MANIFEST_SCHEMA = StructType(
         StructField("n_compounds", LongType(), nullable=False),
     ]
 )
+_MANIFEST_ARROW_SCHEMA = to_arrow_schema(MANIFEST_SCHEMA)
 
 
 def read_manifest(spark: SparkSession, manifest_path: str) -> DataFrame:
@@ -112,6 +123,55 @@ def manifest_row(filename: str, n_compounds: int) -> tuple:
 
     today = datetime.now(timezone.utc).strftime("%Y-%m-%d")
     return (filename, cid(1), cid(2), today, n_compounds)
+
+
+def write_manifest(
+    manifest_path: str, rows: list[tuple], batch: Optional[int] = None
+) -> None:
+    """Commit manifest rows (``manifest_row`` tuples) as one parquet file.
+
+    Batch builds add the file next to the manifest's others. A streaming
+    batch's rows replace the file of its ``ingest_batch=<batch>``
+    partition, so a replayed batch stays idempotent."""
+    names = _MANIFEST_ARROW_SCHEMA.names
+    table = pa.Table.from_pylist(
+        [dict(zip(names, r)) for r in rows], schema=_MANIFEST_ARROW_SCHEMA
+    )
+    if batch is None:
+        commit_parquet(table, manifest_path)
+    else:
+        commit_parquet(
+            table, os.path.join(manifest_path, f"ingest_batch={batch}"), replace=True
+        )
+
+
+def commit_parquet(table: pa.Table, directory: str, replace: bool = False) -> None:
+    """Write ``table`` as one parquet file in ``directory`` and commit it
+    with one ``os.replace``.
+
+    The file is written first under a dot-prefixed name, which Spark and
+    pyarrow readers skip. With ``replace`` every other file of the
+    directory is deleted before the rename, so the directory then holds
+    only this one; a crash in between leaves the directory with no data
+    file, which the caller's retry rewrites. Without ``replace`` only the
+    leftover temporaries of an earlier crash are deleted."""
+    os.makedirs(directory, exist_ok=True)
+    name = f"part-{uuid.uuid4().hex}.parquet"
+    tmp = os.path.join(directory, f".{name}.tmp")
+    # Spark's writer falls back from dictionary encoding when the
+    # dictionary does not pay off; pyarrow does not, and near-unique
+    # index columns (keys, masses) would carry one as large as the data.
+    pq.write_table(table, tmp, use_dictionary=False)
+    with os.scandir(directory) as it:
+        stale = [
+            e.path
+            for e in it
+            if e.path != tmp
+            and (replace or (e.name.startswith(".") and e.name.endswith(".tmp")))
+        ]
+    for path in stale:
+        os.remove(path)
+    os.replace(tmp, os.path.join(directory, name))
 
 
 def _exists(path: str) -> bool:

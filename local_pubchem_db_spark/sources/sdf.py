@@ -44,6 +44,15 @@ _TAG_BLOCK_RE = r"(?m)^> <(.+)>\n([^\n]*)"
 _CID_RE = "<PUBCHEM_COMPOUND_CID>\\n([0-9]+)"
 
 
+def source_file_name() -> Column:
+    """The basename of the file each row was read from. ``input_file_name``
+    is a URI, so its path is %-encoded ("a#b" reads "a%23b"); url_decode
+    restores the name, with "+" escaped first because url_decode reads
+    "+" as a space."""
+    name = F.element_at(F.split(F.input_file_name(), "/"), -1)
+    return F.url_decode(F.replace(name, F.lit("+"), F.lit("%2B")))
+
+
 def read_sdf_records(spark: SparkSession, path: str | list[str]) -> DataFrame:
     """Raw record stream: one row per molecule with columns
     (source_file, record). Apostrophes already stripped (utils.py:264)."""
@@ -51,7 +60,7 @@ def read_sdf_records(spark: SparkSession, path: str | list[str]) -> DataFrame:
     df = spark.read.text(paths, lineSep=RECORD_DELIM)
     return (
         df.select(
-            F.element_at(F.split(F.input_file_name(), "/"), -1).alias("source_file"),
+            source_file_name().alias("source_file"),
             F.regexp_replace(F.col("value"), "'", "").alias("record"),
         )
         # read.text(lineSep) also yields the trailing chunk after the last

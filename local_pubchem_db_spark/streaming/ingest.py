@@ -7,7 +7,9 @@ utils.py:302-332). The Spark-native strengthening is the checkpointed file
 source PLUS an idempotent sink: the checkpoint alone makes foreachBatch
 at-least-once (a crash after the parquet append but before the checkpoint
 commit replays the batch), so both sinks write their batch into an
-``ingest_batch=<id>`` partition with dynamic partition overwrite — a
+``ingest_batch=<id>`` partition that a replay replaces — the compounds
+rows with dynamic partition overwrite, the manifest rows as one file
+committed on the driver (``sources.manifest.write_manifest``) — so a
 replayed batch rewrites its own partition instead of appending duplicates.
 Checkpointed offsets + idempotent writes = end-to-end exactly-once.
 
@@ -32,10 +34,13 @@ from typing import Any, Optional
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from local_pubchem_db_spark.operators.util import driver_rows_df
 from local_pubchem_db_spark.plans.layout import compile_layout
-from local_pubchem_db_spark.sources.manifest import MANIFEST_SCHEMA, manifest_row
-from local_pubchem_db_spark.sources.sdf import RECORD_DELIM, parse_sdf_records
+from local_pubchem_db_spark.sources.manifest import manifest_row, write_manifest
+from local_pubchem_db_spark.sources.sdf import (
+    RECORD_DELIM,
+    parse_sdf_records,
+    source_file_name,
+)
 
 
 def read_sdf_stream(spark: SparkSession, sdf_dir: str, use_gzip: bool) -> DataFrame:
@@ -45,7 +50,7 @@ def read_sdf_stream(spark: SparkSession, sdf_dir: str, use_gzip: bool) -> DataFr
     pattern = os.path.join(sdf_dir, "*.sdf.gz" if use_gzip else "*.sdf")
     raw = spark.readStream.text(pattern, lineSep=RECORD_DELIM)
     records = raw.select(
-        F.element_at(F.split(F.input_file_name(), "/"), -1).alias("source_file"),
+        source_file_name().alias("source_file"),
         F.regexp_replace(F.col("value"), "'", "").alias("record"),
     ).filter(F.col("record").rlike(r"\S"))
     return parse_sdf_records(records)
@@ -107,14 +112,7 @@ def stream_build_db(
             manifest_rows = [
                 manifest_row(f, counts.get(f, 0)) for f in sorted(batch_files)
             ]
-            (
-                driver_rows_df(spark, manifest_rows, MANIFEST_SCHEMA)
-                .withColumn("ingest_batch", F.lit(batch_id))
-                .write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy("ingest_batch")
-                .parquet(db.manifest_path)
-            )
+            write_manifest(db.manifest_path, manifest_rows, batch=batch_id)
         finally:
             rows.unpersist()
 

@@ -3,9 +3,10 @@
 Goldens from the reference (unittests_utils.py:207-334): 8 compounds,
 point lookups, NOT_NULL tightening → 5 rows with specific CIDs skipped,
 transform applied end-to-end, incremental manifest behavior. Also pins
-the per-file index runs: an append writes the runs of its own file only,
-an up-to-date DB costs no Spark job, and only a changed index spec, a
-reset or the pre-run layout rebuilds every run.
+the per-file index runs: an append writes the runs of its own file only
+and runs no Spark job besides its ingest, an up-to-date DB costs no Spark
+job, and only a changed index spec, a reset or the pre-run layout
+rebuilds every run.
 """
 
 import glob
@@ -13,18 +14,28 @@ import gzip
 import json
 import os
 import shutil
+from collections import Counter
 
 import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
-from pyspark.sql.readwriter import DataFrameWriter
 
 from local_pubchem_db_spark.operators.util import driver_rows_df
-from local_pubchem_db_spark.pipeline import PubChemDB, build_db, build_indexes
+from local_pubchem_db_spark.pipeline import (
+    PubChemDB,
+    _sorted_nulls_first,
+    build_db,
+    build_indexes,
+)
 from local_pubchem_db_spark.plans.layout import compile_layout
 from local_pubchem_db_spark.plans.transforms import TransformTranslationError
-from local_pubchem_db_spark.sources.manifest import MANIFEST_SCHEMA, pending_files
+from local_pubchem_db_spark.sources.manifest import (
+    MANIFEST_SCHEMA,
+    pending_files,
+    read_manifest,
+    write_manifest,
+)
 
 GOLD_INCHI_31040 = (
     "InChI=1S/C5H6O5.2Na/c6-3(5(9)10)1-2-4(7)8;;/h1-2H2,(H,7,8)(H,9,10);;/q;2*+1/p-2"
@@ -103,10 +114,15 @@ def index_files(base):
     return parquet_files(base, "idx_*")
 
 
+def spark_order(value):
+    """Sort key of Spark's ASC NULLS FIRST: nulls, numbers, then NaN."""
+    return (value is not None, value != value, value if value == value else 0)
+
+
 def assert_indexes_current(spark, base, cols):
     """Each idx_<col> holds (col, cid) for exactly the compounds rows, each
     run under its compounds partition, and every part file is sorted by
-    col."""
+    col the way Spark sorts it."""
     compounds = spark.read.parquet(os.path.join(base, "db", "compounds"))
     n = compounds.count()
     for c in cols:
@@ -114,15 +130,28 @@ def assert_indexes_current(spark, base, cols):
         idx = spark.read.parquet(path)
         assert idx.columns == [c, "cid", "ingest_batch"]
         assert idx.count() == n
-        assert sorted(idx.collect()) == sorted(
-            compounds.select(c, "cid", "ingest_batch").collect()
+        assert Counter(map(tuple, idx.collect())) == Counter(
+            map(tuple, compounds.select(c, "cid", "ingest_batch").collect())
         )
         assert not glob.glob(os.path.join(path, "*.parquet"))  # runs only
         parts = glob.glob(os.path.join(path, "ingest_batch=*", "*.parquet"))
         assert parts
         for part in parts:
             values = pq.read_table(part).column(c).to_pylist()
-            assert values == sorted(values), part
+            assert values == sorted(values, key=spark_order), part
+
+
+def crash_on_replace(monkeypatch, marker):
+    """Make the rename that commits a file under a path containing
+    ``marker`` raise, as a crash there would."""
+    replace = os.replace
+
+    def crashing(src, dst, *args, **kwargs):
+        if marker in str(dst):
+            raise OSError("injected crash")
+        return replace(src, dst, *args, **kwargs)
+
+    monkeypatch.setattr(os, "replace", crashing)
 
 
 def hold_back(base, tmp_path, name):
@@ -298,10 +327,13 @@ def test_crash_between_data_and_manifest_does_not_duplicate(
 
 def test_noop_rerun_skips_index_build(spark, sdf_dir, tmp_path):
     base = make_base(tmp_path, sdf_dir)
-    s = indexed_specs("inchikey", "InChI")
+    # xlogp3 is nullable: 3 of the 8 compounds have none
+    s = indexed_specs("inchikey", "InChI", "xlogp3")
     assert build_db(base, use_gzip=True, reset=True, db_specs=s, spark=spark) == 0
     before = index_files(base)
     assert before
+    xlogp3 = spark.read.parquet(os.path.join(base, "db", "idx_xlogp3"))
+    assert xlogp3.filter(F.col("xlogp3").isNull()).count() == 3
 
     # nothing pending and every run current: no Spark job at all
     rc, jobs = run_in_job_group(
@@ -316,7 +348,28 @@ def test_noop_rerun_skips_index_build(spark, sdf_dir, tmp_path):
     )
     assert jobs == 0
     assert index_files(base) == before
-    assert_indexes_current(spark, base, ["inchikey", "InChI"])
+    assert_indexes_current(spark, base, ["inchikey", "InChI", "xlogp3"])
+
+
+def test_run_order_matches_spark(spark):
+    # runs are sorted with pyarrow, in the order Spark's ASC NULLS FIRST
+    # gives: nulls first, NaN after every number, strings by UTF-8 bytes
+    nan, inf = float("nan"), float("inf")
+    table = pa.table({
+        "x": [3.0, None, nan, -1.0, inf, None, -inf, 0.5],
+        "s": ["b", "é", None, "Z", "aa", "a", "ä", "B"],
+        "k": list(range(8)),
+    })
+    df = spark.createDataFrame(
+        [tuple(r.values()) for r in table.to_pylist()], "x double, s string, k long"
+    )
+    for c in ("x", "s"):
+        want = [r["k"] for r in df.orderBy(F.col(c).asc_nulls_first(), "k").collect()]
+        got = _sorted_nulls_first(table, c).column("k").to_pylist()
+        ties = [r["k"] for r in df.filter(F.col(c).isNull()).collect()]
+        # nulls tie, so compare them as a set
+        assert sorted(got[: len(ties)]) == sorted(ties)
+        assert got[len(ties):] == want[len(ties):], c
 
 
 def test_append_touches_only_the_new_file(spark, sdf_dir, tmp_path):
@@ -334,8 +387,9 @@ def test_append_touches_only_the_new_file(spark, sdf_dir, tmp_path):
         lambda: build_db(base, use_gzip=True, reset=False, db_specs=s, spark=spark),
     )
     assert rc == 0
-    # ingest (2), one run write per indexed column, the manifest commit
-    assert jobs <= 8
+    # the ingest only: read_sdf's fan-out shuffle and the compounds write;
+    # the runs and the manifest commit are written on the driver
+    assert jobs == 2
     after = parquet_files(base, "compounds", "idx_*")
     assert before.items() <= after.items()  # no earlier file rewritten
     new = set(after) - set(before)
@@ -361,21 +415,29 @@ def test_crash_after_runs_before_manifest_is_overwritten(
     assert build_db(base, use_gzip=True, reset=True, db_specs=s, spark=spark) == 0
     db = PubChemDB(spark, base)
 
+    # crash in the manifest commit: its temporary file is left behind
     land()
-    write = DataFrameWriter.parquet
-
-    def crash_on_manifest(self, path, *args, **kwargs):
-        if path == db.manifest_path:
-            raise OSError("injected crash")
-        return write(self, path, *args, **kwargs)
-
-    monkeypatch.setattr(DataFrameWriter, "parquet", crash_on_manifest)
-    assert build_db(base, use_gzip=True, reset=False, db_specs=s, spark=spark) == 1
-    monkeypatch.setattr(DataFrameWriter, "parquet", write)
+    with monkeypatch.context() as m:
+        crash_on_replace(m, db.manifest_path)
+        assert build_db(base, use_gzip=True, reset=False, db_specs=s, spark=spark) == 1
     run = os.path.join(db.db_dir, "idx_inchikey", "ingest_batch=cmps_06_07.sdf.gz")
     crashed = parquet_files(base, "compounds", "idx_*")
     assert glob.glob(os.path.join(run, "*.parquet"))
-    assert db.sdf_file().count() == 2
+    assert glob.glob(os.path.join(db.manifest_path, ".*.tmp"))
+    assert db.sdf_file().count() == 2  # readers skip the temporary
+    landed = glob.glob(os.path.join(base, "sdf", "*.sdf.gz"))
+    assert [os.path.basename(f) for f in pending_files(spark, db.manifest_path, landed)] == [
+        "cmps_06_07.sdf.gz"
+    ]
+
+    # the retry crashes after the run's old file is deleted, before the
+    # new one is renamed into place: the run holds no data file
+    with monkeypatch.context() as m:
+        crash_on_replace(m, run)
+        assert build_db(base, use_gzip=True, reset=False, db_specs=s, spark=spark) == 1
+    assert not glob.glob(os.path.join(run, "*.parquet"))
+    assert glob.glob(os.path.join(run, ".*.tmp"))
+    assert spark.read.parquet(os.path.join(db.db_dir, "idx_inchikey")).count() == 6
 
     assert build_db(base, use_gzip=True, reset=False, db_specs=s, spark=spark) == 0
     cids = sorted(r["cid"] for r in db.compounds().select("cid").collect())
@@ -386,17 +448,23 @@ def test_crash_after_runs_before_manifest_is_overwritten(
     assert rewritten and rewritten.isdisjoint(after)
     assert {f: t for f, t in crashed.items() if f not in rewritten}.items() <= after.items()
     assert_indexes_current(spark, base, ["inchikey"])
+    # the next writes removed the temporaries
+    assert not glob.glob(os.path.join(db.db_dir, "**", ".*.tmp"), recursive=True)
 
 
 def test_manifest_counts_from_footers(spark, sdf_dir, tmp_path):
     # n_compounds sums the footers of the partition written for each file:
     # a name that Spark escapes in partition paths ("=" -> "%3D") still
     # gets its rows, and a file whose every row fails NOT NULL writes no
-    # partition and no run but still gets its manifest row with 0
+    # partition and no run but still gets its manifest row with 0. Names
+    # that a file URI encodes ("#", " ", "+") keep their own partitions
+    # and runs, under the names the batch path writes.
     base = make_base(tmp_path, sdf_dir)
     sdf = os.path.join(base, "sdf")
     os.rename(os.path.join(sdf, "cmps_06_07.sdf.gz"),
               os.path.join(sdf, "cmps=06_06_07.sdf.gz"))
+    for name in ("a#b_10_12.sdf.gz", "e f+g_13_15.sdf.gz"):
+        shutil.copy(os.path.join(sdf, "cmps_00_02.sdf.gz"), os.path.join(sdf, name))
     with gzip.open(os.path.join(sdf_dir, "cmps_03_05.sdf.gz"), "rt") as fh:
         lines = fh.read().split("\n")
     no_key = [
@@ -415,17 +483,21 @@ def test_manifest_counts_from_footers(spark, sdf_dir, tmp_path):
     manifest = {r["filename"]: r.asDict() for r in db.sdf_file().collect()}
     assert {f: r["n_compounds"] for f, r in manifest.items()} == {
         "cmps_00_02.sdf.gz": 3, "cmps=06_06_07.sdf.gz": 2, "cmps_08_09.sdf.gz": 0,
+        "a#b_10_12.sdf.gz": 3, "e f+g_13_15.sdf.gz": 3,
     }
     assert (manifest["cmps=06_06_07.sdf.gz"]["lowest_cid"],
             manifest["cmps=06_06_07.sdf.gz"]["highest_cid"]) == (6, 7)
-    assert os.path.isdir(
-        os.path.join(db.compounds_path, "ingest_batch=cmps%3D06_06_07.sdf.gz"))
-    assert not glob.glob(os.path.join(db.db_dir, "*", "ingest_batch=cmps_08_09*"))
-    assert db.compounds().count() == 5
+    parts = {
+        "ingest_batch=cmps_00_02.sdf.gz", "ingest_batch=cmps%3D06_06_07.sdf.gz",
+        "ingest_batch=a%23b_10_12.sdf.gz", "ingest_batch=e f+g_13_15.sdf.gz",
+    }
+    for table in ("compounds", "idx_inchikey"):
+        assert set(os.listdir(os.path.join(db.db_dir, table))) == parts
+    assert db.compounds().count() == 11
     assert_indexes_current(spark, base, ["inchikey"])
     # the empty file counts as ingested
     assert build_db(base, use_gzip=True, reset=False, db_specs=s, spark=spark) == 0
-    assert db.sdf_file().count() == 3
+    assert db.sdf_file().count() == 5
 
 
 def test_stale_indexes_rebuild(spark, sdf_dir, tmp_path, monkeypatch):
@@ -447,7 +519,7 @@ def test_stale_indexes_rebuild(spark, sdf_dir, tmp_path, monkeypatch):
         spark, "missing_run_build_indexes",
         lambda: build_indexes(spark, db, compile_layout(s)),
     )
-    assert jobs >= 1
+    assert jobs == 0  # runs are written on the driver
     after = index_files(base)
     assert before.items() <= after.items()
     assert set(after) - set(before) == run_files(part)
@@ -469,17 +541,10 @@ def test_stale_indexes_rebuild(spark, sdf_dir, tmp_path, monkeypatch):
     # a WITH_INDEX column added without reset rebuilds every run; the
     # first attempt crashes in a run write and the retry completes it
     s = indexed_specs("inchikey", "InChI")
-    write = DataFrameWriter.parquet
-
-    def crash_on_index(self, path, *args, **kwargs):
-        if "idx_InChI" in path:
-            raise OSError("injected crash")
-        return write(self, path, *args, **kwargs)
-
     before = index_files(base)
-    monkeypatch.setattr(DataFrameWriter, "parquet", crash_on_index)
-    assert build_db(base, use_gzip=True, reset=False, db_specs=s, spark=spark) == 1
-    monkeypatch.setattr(DataFrameWriter, "parquet", write)
+    with monkeypatch.context() as m:
+        crash_on_replace(m, "idx_InChI")
+        assert build_db(base, use_gzip=True, reset=False, db_specs=s, spark=spark) == 1
     assert build_db(base, use_gzip=True, reset=False, db_specs=s, spark=spark) == 0
     assert set(index_files(base)).isdisjoint(before)
     assert_indexes_current(spark, base, ["inchikey", "InChI"])
@@ -513,7 +578,7 @@ def test_flat_indexes_migrate_once(spark, sdf_dir, tmp_path):
         spark, "migrate_build_indexes",
         lambda: build_indexes(spark, db, compile_layout(s)),
     )
-    assert jobs >= 1
+    assert jobs == 0  # runs are written on the driver
     assert_indexes_current(spark, base, ["inchikey"])
     migrated = index_files(base)
     _, jobs = run_in_job_group(
@@ -539,7 +604,9 @@ def test_pending_files_no_job(spark, sdf_dir, tmp_path):
 
 
 def test_pending_files_partitioned_manifest(spark, tmp_path):
-    # streaming/ingest.py writes the manifest partitioned by ingest_batch
+    # streaming/ingest.py writes the manifest partitioned by ingest_batch;
+    # a DB may hold batches that Spark wrote and batches written on the
+    # driver, and a replayed batch replaces its partition's file
     manifest = str(tmp_path / "sdf_file")
     rows = [("a_1_2.sdf.gz", 1, 2, "2024-01-01", 3),
             ("b_3_4.sdf.gz", 3, 4, "2024-01-01", 0)]
@@ -551,6 +618,8 @@ def test_pending_files_partitioned_manifest(spark, tmp_path):
             .partitionBy("ingest_batch")
             .parquet(manifest)
         )
+    write_manifest(manifest, [rows[1]], batch=1)
+    write_manifest(manifest, [("d_7_8.sdf.gz", 7, 8, "2024-01-02", 5)], batch=2)
     # a crashed write's task output names c_5_6 but was never committed
     crashed = os.path.join(manifest, "_temporary", "0", "_temporary", "attempt_0")
     os.makedirs(crashed)
@@ -558,9 +627,13 @@ def test_pending_files_partitioned_manifest(spark, tmp_path):
         pa.table({"filename": ["c_5_6.sdf.gz"], "n_compounds": [1]}),
         os.path.join(crashed, "part-00000.parquet"),
     )
-    candidates = ["/x/sdf/c_5_6.sdf.gz", "/x/sdf/b_3_4.sdf.gz", "/x/sdf/a_1_2.sdf.gz"]
+    candidates = ["/x/sdf/c_5_6.sdf.gz", "/x/sdf/b_3_4.sdf.gz",
+                  "/x/sdf/a_1_2.sdf.gz", "/x/sdf/d_7_8.sdf.gz"]
     left, jobs = run_in_job_group(
         spark, "pending_files_partitioned",
         lambda: pending_files(spark, manifest, candidates),
     )
     assert (left, jobs) == (["/x/sdf/c_5_6.sdf.gz"], 0)
+    assert sorted(map(tuple, read_manifest(spark, manifest).collect())) == [
+        *rows, ("d_7_8.sdf.gz", 7, 8, "2024-01-02", 5)
+    ]
