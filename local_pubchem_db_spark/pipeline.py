@@ -16,8 +16,11 @@ Lifecycle parity:
 
 Scale design notes:
 - ALL pending files are ingested by ONE Spark write (the reference loops
-  file-by-file in Python): its job, plus the shuffle-map job of
-  ``read_sdf``'s fan-out, are the only Spark jobs of an append.
+  file-by-file in Python). Below ``read_sdf``'s fan-out floor
+  (``FAN_OUT_MIN_BYTES`` of input on disk, e.g. one 1,000-record .gz
+  shard) that write's job is the only Spark job of an append, with one
+  task and one part file per shard. At or above the floor the records
+  are first spread over every core, which adds a shuffle-map job.
   Parallelism is per-file for .gz and per-split for plain text. The
   manifest needs no second pass over the data: each file's
   ``n_compounds`` is the sum of the parquet footer row counts of the
@@ -72,6 +75,7 @@ import shutil
 import traceback
 from timeit import default_timer as _timer
 from typing import Any, Optional
+from weakref import WeakKeyDictionary
 
 import pyarrow as pa
 import pyarrow.compute as pc
@@ -79,10 +83,11 @@ import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from local_pubchem_db_spark.operators.util import register_session_memo
 from local_pubchem_db_spark.plans.layout import (
     CompiledLayout,
+    column_expr,
     compile_layout,
-    select_exprs,
 )
 from local_pubchem_db_spark.sources.manifest import (
     commit_parquet,
@@ -94,15 +99,30 @@ from local_pubchem_db_spark.sources.manifest import (
 from local_pubchem_db_spark.sources.sdf import read_sdf
 
 
+# per session: (name, SD tags, dtype, CREATE_LIKE, native transform) ->
+# that layout column's select expression over ``tags``
+_COLUMN_EXPRS: WeakKeyDictionary = WeakKeyDictionary()
+register_session_memo(_COLUMN_EXPRS)
+
+
 def compounds_plan(sdf: DataFrame, layout: CompiledLayout) -> DataFrame:
     """The logical plan for the compounds table from parsed SDF records.
 
     select(coalesce → strict cast → transform) per layout column, then the
-    NOT-NULL row skip (utils.py:140-155) as na.drop.
+    NOT-NULL row skip (utils.py:140-155) as na.drop. Each column's
+    expression is built once per session and reused by later appends.
     """
-    projected = sdf.select(
-        F.col("source_file"), *select_exprs(layout, F.col("tags"))
-    )
+    memo = _COLUMN_EXPRS.setdefault(sdf.sparkSession, {})
+    exprs = []
+    for col in layout.columns.values():
+        key = (
+            col.name, tuple(col.sd_tags), col.dtype, col.create_like,
+            col.transform_is_native,
+        )
+        if key not in memo:
+            memo[key] = column_expr(col, F.col("tags"))
+        exprs.append(memo[key])
+    projected = sdf.select("source_file", *exprs)
     if layout.not_null_cols:
         projected = projected.na.drop(subset=layout.not_null_cols)
     return projected

@@ -220,22 +220,24 @@ def select_exprs(
     layout: CompiledLayout,
     tags_col: Column,
 ) -> list[Column]:
-    """Build the per-column select expressions over a parsed tag map.
+    """Build the per-column select expressions over a parsed tag map
+    (``column_expr`` for each layout column, in layout order)."""
+    return [column_expr(col, tags_col) for col in layout.columns.values()]
 
-    For each layout column: coalesce over its SD_TAGs (first tag present
-    wins — utils.py:85-89,102-112), strict cast to the declared type, then
-    the CREATE_LIKE transform, then a final cast back to the declared type
+
+def column_expr(col: ColumnSpec, tags_col: Column) -> Column:
+    """One layout column's select expression over a parsed tag map:
+    coalesce over its SD_TAGs (first tag present wins —
+    utils.py:85-89,102-112), strict cast to the declared type, then the
+    CREATE_LIKE transform, then a final cast back to the declared type
     (mirrors SQLite column affinity coercing transform outputs).
     """
-    exprs: list[Column] = []
-    for col in layout.columns.values():
-        raw = F.coalesce(*[tags_col.getItem(t) for t in col.sd_tags]) \
-            if len(col.sd_tags) > 1 else tags_col.getItem(col.sd_tags[0])
-        value = strict_cast(raw, col)
-        if col.transform is not None:
-            value = col.transform(value).cast(col.spark_type)
-        exprs.append(value.alias(col.name))
-    return exprs
+    raw = F.coalesce(*[tags_col.getItem(t) for t in col.sd_tags]) \
+        if len(col.sd_tags) > 1 else tags_col.getItem(col.sd_tags[0])
+    value = strict_cast(raw, col)
+    if col.transform is not None:
+        value = col.transform(value).cast(col.spark_type)
+    return value.alias(col.name)
 
 
 def strict_cast(raw: Column, col: ColumnSpec) -> Column:

@@ -39,7 +39,7 @@ from local_pubchem_db_spark.sources.manifest import manifest_row, write_manifest
 from local_pubchem_db_spark.sources.sdf import (
     RECORD_DELIM,
     parse_sdf_records,
-    source_file_name,
+    sdf_records,
 )
 
 
@@ -49,11 +49,7 @@ def read_sdf_stream(spark: SparkSession, sdf_dir: str, use_gzip: bool) -> DataFr
     watches for new files."""
     pattern = os.path.join(sdf_dir, "*.sdf.gz" if use_gzip else "*.sdf")
     raw = spark.readStream.text(pattern, lineSep=RECORD_DELIM)
-    records = raw.select(
-        source_file_name().alias("source_file"),
-        F.regexp_replace(F.col("value"), "'", "").alias("record"),
-    ).filter(F.col("record").rlike(r"\S"))
-    return parse_sdf_records(records)
+    return parse_sdf_records(sdf_records(raw))
 
 
 def stream_build_db(

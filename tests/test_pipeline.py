@@ -387,12 +387,14 @@ def test_append_touches_only_the_new_file(spark, sdf_dir, tmp_path):
         lambda: build_db(base, use_gzip=True, reset=False, db_specs=s, spark=spark),
     )
     assert rc == 0
-    # the ingest only: read_sdf's fan-out shuffle and the compounds write;
-    # the runs and the manifest commit are written on the driver
-    assert jobs == 2
+    # the compounds write only: a shard below read_sdf's fan-out floor is
+    # parsed in its scan task, and the runs and the manifest commit are
+    # written on the driver
+    assert jobs == 1
     after = parquet_files(base, "compounds", "idx_*")
     assert before.items() <= after.items()  # no earlier file rewritten
     new = set(after) - set(before)
+    assert len([f for f in new if f.split(os.sep)[-3] == "compounds"]) == 1
     assert {os.path.basename(os.path.dirname(f)) for f in new} == {
         "ingest_batch=cmps_06_07.sdf.gz"
     }

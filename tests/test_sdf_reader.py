@@ -5,12 +5,21 @@ CID sequences per fixture file, exact InChI strings, xlogp3 multi-tag
 coalesce in all three SD_TAG configurations.
 """
 
+import gzip
+import logging
 import os
 
 from pyspark.sql import functions as F
 
+from local_pubchem_db_spark.operators.util import release_shared_caches
 from local_pubchem_db_spark.plans.layout import compile_layout, select_exprs
-from local_pubchem_db_spark.sources.sdf import read_sdf
+from local_pubchem_db_spark.sources import sdf as sdf_source
+from local_pubchem_db_spark.sources.sdf import (
+    FAN_OUT_MIN_BYTES,
+    parse_sdf_records,
+    read_sdf,
+)
+from tests.test_pipeline import run_in_job_group
 
 INCHIS = [
     "InChI=1S/C18H31NO/c1-2-3-4-5-6-7-8-9-10-11-12-13-18-14-16-19(20)17-15-18/h14-17H,2-13H2,1H3",
@@ -124,3 +133,70 @@ def test_multiline_value_truncated_to_first_line(spark, sdf_dir):
     }
     rows = extract(spark, sdf_dir, "cmps_00_02.sdf", specs)
     assert all(r["coord"] == "1" for r in rows)
+
+
+def test_fan_out_gated_on_input_bytes(spark, sdf_dir, tmp_path, caplog):
+    # fixture records repeated past the floor, stored uncompressed so the
+    # on-disk size is the record bytes
+    with open(os.path.join(sdf_dir, "cmps_00_02.sdf"), "rb") as fh:
+        chunk = fh.read()
+    big = tmp_path / "big_00_02.sdf.gz"
+    with gzip.open(big, "wb", compresslevel=0) as fh:
+        for _ in range(FAN_OUT_MIN_BYTES // len(chunk) + 1):
+            fh.write(chunk)
+    small = os.path.join(sdf_dir, "cmps_00_02.sdf.gz")
+    assert os.path.getsize(big) >= FAN_OUT_MIN_BYTES > os.path.getsize(small)
+
+    caplog.set_level(logging.INFO, logger="local_pubchem_db_spark.decisions")
+    plans, jobs = run_in_job_group(spark, "sdf_plan_only", lambda: [
+        read_sdf(spark, p)._jdf.queryExecution().executedPlan().toString()
+        for p in (str(big), small)
+    ])
+    assert jobs == 0
+    assert "RoundRobinPartitioning" in plans[0]
+    assert "Exchange" not in plans[1]
+    decisions = [
+        r.decision for r in caplog.records
+        if r.name == "local_pubchem_db_spark.decisions"
+    ]
+    target = spark.sparkContext.defaultParallelism
+    assert decisions == [
+        {"operator": "read_sdf", "choice": choice, "input_bytes": size,
+         "min_bytes": FAN_OUT_MIN_BYTES, "target": target}
+        for choice, size in (
+            ("fan_out", os.path.getsize(big)),
+            ("scan_tasks", os.path.getsize(small)),
+        )
+    ]
+
+
+def test_parse_memo_keyed_on_dedup_policy(spark):
+    from local_pubchem_db_spark.pipeline import _COLUMN_EXPRS, compounds_plan
+
+    record = (
+        "\n> <PUBCHEM_COMPOUND_CID>\n42\n\n"
+        "> <DUP_TAG>\nfirst\n\n"
+        "> <DUP_TAG>\nsecond\n"
+    )
+    df = spark.createDataFrame([(record,)], ["record"])
+    prev = spark.conf.get("spark.sql.mapKeyDedupPolicy")
+    try:
+        spark.conf.set("spark.sql.mapKeyDedupPolicy", "LAST_WIN")
+        last_win = parse_sdf_records(df).collect()[0]
+        # a memo keyed without the policy would reuse the LAST_WIN
+        # expression, whose duplicate keys fail under EXCEPTION
+        spark.conf.set("spark.sql.mapKeyDedupPolicy", "EXCEPTION")
+        exception = parse_sdf_records(df).collect()[0]
+    finally:
+        spark.conf.set("spark.sql.mapKeyDedupPolicy", prev)
+    assert last_win["tags"]["DUP_TAG"] == exception["tags"]["DUP_TAG"] == "first"
+    assert {("LAST_WIN", "record"), ("EXCEPTION", "record")} <= set(
+        sdf_source._PARSE_EXPRS[spark]
+    )
+
+    layout = compile_layout(base_specs(["PUBCHEM_XLOGP3"]))
+    compounds_plan(parse_sdf_records(df.withColumn("source_file", F.lit("x"))), layout)
+    assert len(_COLUMN_EXPRS[spark]) >= len(layout.columns)
+    release_shared_caches(spark)
+    assert spark not in sdf_source._PARSE_EXPRS
+    assert spark not in _COLUMN_EXPRS
