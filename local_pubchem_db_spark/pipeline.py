@@ -26,7 +26,13 @@ Scale design notes:
   ``n_compounds`` is the sum of the parquet footer row counts of the
   partition just written for it, read on the driver.
 - The NOT-NULL filter runs before the sink (filter-before-sink,
-  utils.py:140-155) and Catalyst pushes it toward the scan.
+  utils.py:140-155). Filter pushdown inlines projected aliases into the
+  predicate, so were ``tags`` a plain projection the filter would carry
+  a copy of the whole tag-map parse per NOT-NULL column, below the
+  fan-out exchange. ``parse_sdf_records`` yields ``tags`` from a
+  generator instead, which the filter cannot pass: each record is
+  parsed once, after the exchange, and on a ``get_spark`` session the
+  parse, projection and filter run in one whole-stage codegen stage.
 - Secondary indexes (WITH_INDEX) have no SQLite analog in Spark; the
   columnar analog of CREATE INDEX (utils.py:334-341) is a sorted covering
   projection ``idx_<col>`` (col + pk) per indexed column, whose parquet
@@ -111,6 +117,8 @@ def compounds_plan(sdf: DataFrame, layout: CompiledLayout) -> DataFrame:
     select(coalesce → strict cast → transform) per layout column, then the
     NOT-NULL row skip (utils.py:140-155) as na.drop. Each column's
     expression is built once per session and reused by later appends.
+    ``sdf`` comes from ``parse_sdf_records``, whose ``tags`` the
+    pushed-down na.drop reads as built, never as a copy of the parse.
     """
     memo = _COLUMN_EXPRS.setdefault(sdf.sparkSession, {})
     exprs = []

@@ -11,10 +11,11 @@ Spark-first re-expression:
   auto-gunzipped by extension. At 100 TB (PubChem ships thousands of
   ``Compound_*.sdf.gz`` shards) parallelism is per-file for .gz and
   per-128MB-split for plain text — no driver-side reading at all.
-- Tag parsing happens ONCE into a ``map<string,string>`` column; the layout
-  projection then reads map keys. Catalyst prunes everything downstream; the
-  reference's hand-rolled "only scan requested tags" optimization
-  (utils.py:85-102) is subsumed by column pruning.
+- Tag parsing happens ONCE per record into a ``map<string,string>``
+  column, after any fan-out exchange (``parse_sdf_records``); the layout
+  projection then reads map keys, and the reference's hand-rolled "only
+  scan requested tags" loop (utils.py:85-102) becomes map lookups in
+  generated code.
 
 Reference quirks deliberately preserved (observable in outputs):
 - every ``'`` is deleted from the raw record before any extraction
@@ -54,19 +55,19 @@ _CID_RE = "<PUBCHEM_COMPOUND_CID>\\n([0-9]+)"
 # it buys: one job instead of two, and one part file per shard instead
 # of one per core. Measured on one generated .gz shard (~470 KB per
 # 1,000 records) written as build_db writes it, 4 vCPU, median of 10
-# alternating pairs, fan-out vs one-task parse: 1.5k records (0.70 MB)
-# 900 vs 818 ms, 2k (0.93 MB) 923 vs 1,037 ms (table: read_sdf). The
-# floor sits just above that crossover: up to it the one-task parse
-# loses at most ~12% once, and the shard stays one file for every later
-# lookup. A plain .sdf is ~12x larger on disk for the same records, so
-# it fans out at ~1/12 of the records.
+# alternating pairs, fan-out vs one-task parse: 1k records (0.48 MB)
+# 489 vs 375 ms, 1.5k (0.71 MB) 392 vs 394 ms, 2k (0.94 MB) 396 vs
+# 451 ms (table: read_sdf). The floor sits above that crossover: up to
+# it the one-task parse loses at most ~14%, and the shard stays one
+# file for every later lookup. A plain .sdf is ~12x larger on disk for
+# the same records, so it fans out at ~1/12 of the records.
 FAN_OUT_MIN_BYTES = 1 << 20  # 1 MiB
 
 # one INFO record per adaptive choice; its ``decision`` attribute holds
 # the operator, measured inputs, thresholds and choice
 _DECISIONS = logging.getLogger("local_pubchem_db_spark.decisions")
 
-# per session: (mapKeyDedupPolicy, record column) -> (cid, tags) Columns
+# per session: (mapKeyDedupPolicy, record column) -> (cid, tags generator)
 _PARSE_EXPRS: WeakKeyDictionary = WeakKeyDictionary()
 register_session_memo(_PARSE_EXPRS)
 
@@ -109,17 +110,33 @@ def read_sdf_records(spark: SparkSession, path: str | list[str]) -> DataFrame:
 def parse_sdf_records(records: DataFrame, record_col: str = "record") -> DataFrame:
     """Add ``cid`` (long) and ``tags`` (map<string,string>) columns.
 
-    First regex match wins for cid (utils.py:265). For tags, the fast
-    path reverses the entry array before ``map_from_entries`` so that
-    under the session's LAST_WIN dedup policy the FIRST occurrence of a
-    duplicated tag wins (``get_spark`` sets LAST_WIN; the dedup runs
-    inside codegen for free). A session whose ``mapKeyDedupPolicy`` is
-    not LAST_WIN is left UNTOUCHED — mutating foreign session state
-    would silently change duplicate-key semantics for unrelated code —
-    and gets an explicit first-occurrence filter instead (interpreted
-    HOF, ~5x the expression cost of the fast path; measured r2). The
-    policy is snapshotted at plan-construction time; the two Columns are
-    built once per (session, policy, record column) and reused.
+    First regex match wins for cid (utils.py:265). The tag map is built
+    once per record, behind a barrier: it is the output of a one-row
+    ``inline`` generator, not a projected alias. Filter pushdown inlines
+    a projected alias into every predicate that reads it, so
+    ``compounds_plan``'s NOT-NULL ``na.drop`` would copy the whole map
+    builder into its Filter once per NOT-NULL column and, above
+    ``read_sdf``'s fan-out floor, below the round-robin exchange: each
+    record parsed serially in its file's scan task and again after the
+    shuffle. A predicate on generator output cannot move below the
+    Generate, so the filter reads the built map, after any exchange.
+
+    Under the session's LAST_WIN dedup policy (``get_spark`` sets it)
+    keys and values are two ``regexp_extract_all`` group scans and the
+    map is ``map_from_arrays`` of the reversed arrays, so the FIRST
+    occurrence of a duplicated tag wins. No lambda function is involved:
+    ``ArrayTransform``, ``ArrayFilter`` and the other higher-order
+    functions are ``CodegenFallback``, which keeps their whole operator
+    out of whole-stage codegen, so on this path the Generate, the layout
+    projection and the NOT-NULL filter run in one generated stage. A
+    session whose ``mapKeyDedupPolicy`` is not LAST_WIN is left
+    UNTOUCHED — mutating foreign session state would silently change
+    duplicate-key semantics for unrelated code — and gets an explicit
+    first-occurrence ``filter`` instead, interpreted, behind the same
+    barrier. The policy is snapshotted at plan-construction time; the
+    two Columns are built once per (session, policy, record column) and
+    reused. ``cid`` stays a plain column outside the barrier, so a plan
+    that never reads it (``compounds_plan``) prunes its regex.
     """
     policy = (
         records.sparkSession.conf.get("spark.sql.mapKeyDedupPolicy", "EXCEPTION")
@@ -130,36 +147,31 @@ def parse_sdf_records(records: DataFrame, record_col: str = "record") -> DataFra
     if key not in memo:
         memo[key] = _parse_exprs(policy, record_col)
     cid, tags = memo[key]
-    return records.withColumns({"cid": cid, "tags": tags})
+    base = records.drop("cid", "tags")
+    return base.select("*", tags).select(*base.columns, cid.alias("cid"), "tags")
 
 
 def _parse_exprs(policy: str, record_col: str) -> tuple[Column, Column]:
+    """(cid, the generator that yields ``tags``)."""
     rec = F.col(record_col)
-    # regexp_extract_all with a group index extracts one group; we need both
-    # groups, so extract full blocks then split tag/value per element.
-    blocks = F.regexp_extract_all(rec, F.lit(_TAG_BLOCK_RE), 0)
-    tag_of = lambda b: F.regexp_extract(b, r"^> <(.+)>", 1)  # noqa: E731
-    val_of = lambda b: F.regexp_extract(b, r"\n([^\n]*)$", 1)  # noqa: E731
-    entries = F.transform(
-        blocks, lambda b: F.struct(tag_of(b).alias("key"), val_of(b).alias("value"))
-    )
+    keys = F.regexp_extract_all(rec, F.lit(_TAG_BLOCK_RE), 1)
+    values = F.regexp_extract_all(rec, F.lit(_TAG_BLOCK_RE), 2)
     if policy == "LAST_WIN":
-        dedup_entries = F.reverse(entries)
+        tags = F.map_from_arrays(F.reverse(keys), F.reverse(values))
     else:
         # first occurrence of each key survives; the deduped array is
         # safe under the session's own EXCEPTION (or ANY) policy
-        dedup_entries = F.filter(
-            entries,
-            lambda e, i: F.array_position(
-                F.transform(entries, lambda x: x["key"]), e["key"]
+        tags = F.map_from_entries(
+            F.filter(
+                F.arrays_zip(keys.alias("key"), values.alias("value")),
+                lambda e, i: F.array_position(keys, e["key"]) == i + 1,
             )
-            == i + 1,
         )
     cid_str = F.regexp_extract(rec, _CID_RE, 1)
     # nullif: a missing CID extracts as '' which ANSI cast rejects;
     # the documented deviation is cid NULL for CID-less records.
     cid = F.nullif(cid_str, F.lit("")).cast("long")
-    return cid, F.map_from_entries(dedup_entries)
+    return cid, F.inline(F.array(F.struct(tags.alias("tags"))))
 
 
 def read_sdf(spark: SparkSession, path: str | list[str]) -> DataFrame:
@@ -175,13 +187,13 @@ def read_sdf(spark: SparkSession, path: str | list[str]) -> DataFrame:
     vs none, 4 vCPU, 10 alternating pairs, compounds projection with a
     noop sink (two runs) or written as ``build_db`` writes it:
 
-        records  bytes     noop run 1     noop run 2     parquet
-        1k       0.47 MB    662 /   593    606 /   612    909 /   828
-        1.5k     0.70 MB         -              -          900 /   818
-        2k       0.93 MB    888 /   994         -          923 / 1,037
-        3k       1.41 MB  1,153 / 1,230    905 / 1,035  1,243 / 1,414
-        5k       2.34 MB  1,703 / 2,051  1,723 / 1,699  1,671 / 2,205
-        8k       3.74 MB  2,334 / 2,910  2,481 / 2,924        -
+        records  bytes     noop run 1   noop run 2   parquet
+        1k       0.48 MB   312 / 279    359 / 276    489 /   375
+        1.5k     0.71 MB   285 / 319    303 / 317    392 /   394
+        2k       0.94 MB   277 / 311    295 / 337    396 /   451
+        3k       1.40 MB   350 / 422    376 / 432    455 /   543
+        5k       2.36 MB   485 / 682    527 / 691    638 /   731
+        8k       3.77 MB   709 / 980    726 / 970    854 / 1,147
 
     A path that cannot be sized on the driver (a URI, a directory, a
     glob) fans out, as every input did before the floor. The choice is
