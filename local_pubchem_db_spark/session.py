@@ -40,14 +40,6 @@ that survives a 1000-executor / 100 TB deployment:
   again with Janino, and the JIT starts over on the new class. 2048
   holds the whole registry's working set with room to spare;
   ``extra_conf`` overrides it.
-- ``spark.sql.codegen.hugeMethodLimit=8000``: HotSpot's own limit for
-  JIT compilation. The SDF compounds stage (tag-map Generate, NOT-NULL
-  filter and layout projection in one whole-stage function) grows ~400
-  bytes per NOT-NULL column: 6.7 KB for the default 10-column layout,
-  10.7 KB for 20 columns. Above 8 KB HotSpot interprets it: parsing and
-  writing a 20k-record shard with a 30-column layout took 3.9 s that way
-  against 1.9 s with the stage falling back to per-operator code (4
-  vCPU, median of 4).
 - ``spark.sql.codegen.useIdInClassName=false``: whole-stage classes are
   all named ``GeneratedIterator``. With the stage id in the name, a
   stage whose id shifts (AQE numbers stages in the order it plans them)
@@ -128,10 +120,6 @@ def get_spark(
         # order it plans them, so the same stage's code otherwise differs
         # (and misses the cache) when that order changes between calls
         "spark.sql.codegen.useIdInClassName": "false",
-        # HotSpot never JIT-compiles a method above 8,000 bytes: a larger
-        # whole-stage function falls back to per-operator code instead of
-        # running in the bytecode interpreter (module docstring)
-        "spark.sql.codegen.hugeMethodLimit": "8000",
     }
     if extra_conf:
         conf.update(extra_conf)

@@ -133,10 +133,12 @@ def parse_sdf_records(records: DataFrame, record_col: str = "record") -> DataFra
     UNTOUCHED — mutating foreign session state would silently change
     duplicate-key semantics for unrelated code — and gets an explicit
     first-occurrence ``filter`` instead, interpreted, behind the same
-    barrier. The policy is snapshotted at plan-construction time; the
-    two Columns are built once per (session, policy, record column) and
-    reused. ``cid`` stays a plain column outside the barrier, so a plan
-    that never reads it (``compounds_plan``) prunes its regex.
+    barrier; its lambda reads the key array through a lambda variable,
+    so that path also scans each record once. The policy is snapshotted
+    at plan-construction time; the two Columns are built once per
+    (session, policy, record column) and reused. ``cid`` stays a plain
+    column outside the barrier, so a plan that never reads it
+    (``compounds_plan``) prunes its regex.
     """
     policy = (
         records.sparkSession.conf.get("spark.sql.mapKeyDedupPolicy", "EXCEPTION")
@@ -160,13 +162,18 @@ def _parse_exprs(policy: str, record_col: str) -> tuple[Column, Column]:
         tags = F.map_from_arrays(F.reverse(keys), F.reverse(values))
     else:
         # first occurrence of each key survives; the deduped array is
-        # safe under the session's own EXCEPTION (or ANY) policy
-        tags = F.map_from_entries(
-            F.filter(
-                F.arrays_zip(keys.alias("key"), values.alias("value")),
-                lambda e, i: F.array_position(keys, e["key"]) == i + 1,
-            )
-        )
+        # safe under the session's own EXCEPTION (or ANY) policy. The
+        # arrays are bound to the outer lambda variable ``s``: an inner
+        # lambda that named ``keys`` would rerun its regex scan per tag
+        tags = F.transform(
+            F.array(F.struct(keys.alias("k"), values.alias("v"))),
+            lambda s: F.map_from_entries(
+                F.filter(
+                    F.arrays_zip(s["k"].alias("key"), s["v"].alias("value")),
+                    lambda e, i: F.array_position(s["k"], e["key"]) == i + 1,
+                )
+            ),
+        )[0]
     cid_str = F.regexp_extract(rec, _CID_RE, 1)
     # nullif: a missing CID extracts as '' which ANSI cast rejects;
     # the documented deviation is cid NULL for CID-less records.

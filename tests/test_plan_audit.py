@@ -19,6 +19,7 @@ from local_pubchem_db_spark.plans.layout import compile_layout, load_db_specific
 from local_pubchem_db_spark.queries import QUERIES
 from local_pubchem_db_spark.sources.sdf import FAN_OUT_MIN_BYTES, read_sdf
 from tests.test_pipeline import run_in_job_group
+from tests.test_sdf_parser_properties import dedup_policy
 
 # name -> {pattern: max_count} with the justification for each entry.
 ALLOWED = {
@@ -94,10 +95,14 @@ def _ingest_plans(spark, path, layout):
     return planned, static
 
 
-def test_sdf_ingest_parses_each_record_once(spark, sdf_dir, tmp_path):
-    layout = compile_layout(load_db_specifications(
+def _default_layout():
+    return compile_layout(load_db_specifications(
         os.path.join(os.path.dirname(os.path.dirname(__file__)), "default_db_layout.json")
     ))
+
+
+def test_sdf_ingest_parses_each_record_once(spark, sdf_dir, tmp_path):
+    layout = _default_layout()
     # above read_sdf's fan-out floor: fixture records stored uncompressed
     with open(os.path.join(sdf_dir, "cmps_00_02.sdf"), "rb") as fh:
         chunk = fh.read()
@@ -125,3 +130,19 @@ def test_sdf_ingest_parses_each_record_once(spark, sdf_dir, tmp_path):
                  or n[3].startswith("[source_file") and "tags" in n[3]]
         assert len(parse) == 3, static
         assert all(n[0] for n in parse) and len({n[1] for n in parse}) == 1, static
+
+
+def test_sdf_fallback_parse_scans_each_record_once(spark, sdf_dir):
+    # a session whose mapKeyDedupPolicy is not LAST_WIN dedups with a
+    # lambda, which must read the key array built once, not rescan
+    small = os.path.join(sdf_dir, "cmps_00_02.sdf.gz")
+    with dedup_policy(spark, "EXCEPTION"):
+        plans, jobs = run_in_job_group(
+            spark, "sdf_fallback_plan_only",
+            lambda: _ingest_plans(spark, small, _default_layout()),
+        )
+    assert jobs == 0
+    for plan in plans:
+        # the key scan and the value scan, each once
+        assert plan.count("regexp_extract_all") == 2, plan
+        assert plan.count("map_from_") == 1, plan
